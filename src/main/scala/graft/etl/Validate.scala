@@ -17,7 +17,10 @@ object Validate {
   final case class MissingColumns(table: String, missing: Set[String])
 
   /** F1 — order-insensitive required-column subset check. Pure schema
-    * inspection: no job runs, so it scales to any input size for free. */
+    * inspection: no job runs, so it scales to any input size for free. On
+    * a CSV source that holds end to end: `Sources.csvRaw` resolves the
+    * header columns on the driver, so neither opening nor validating runs
+    * a job (asserted in SourcesSpec). */
   def requiredColumns(table: String, df: DataFrame, required: Set[String])
       : Either[MissingColumns, DataFrame] = {
     val missing = required -- df.columns.toSet

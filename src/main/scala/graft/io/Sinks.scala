@@ -35,6 +35,47 @@ object Sinks {
     w1.parquet(path)
   }
 
+  /** Several [[parquet]] writes, run at the same time: each output's jobs
+    * keep the cluster busy while another's driver is planning, committing
+    * or waiting on a straggler, and outputs computed from one persisted
+    * frame share its cache instead of each re-deriving its lineage.
+    *
+    * The first output is written on the calling thread, each other one on
+    * a thread started here, which inherits the caller's Spark local
+    * properties (job group, scheduler pool, description) as they are now.
+    * Returns only once every write has ended, whether or not any failed —
+    * so a caller may unpersist the inputs afterwards — and then rethrows
+    * the failure of the earliest failed output in `outputs` order, with
+    * the other failures suppressed into it. */
+  def parquetAll(outputs: Seq[(DataFrame, String)],
+                 partitionBy: Seq[String]): Unit = {
+    val writes = outputs.map { case (df, path) =>
+      () => parquet(df, path, partitionBy) }
+    val helpers = writes.drop(1).map { w =>
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val t = new Thread(
+        () => try w() catch { case e: Throwable => failure.set(e) },
+        "graft-sinks-parquet")
+      t.setDaemon(true)
+      t.start()
+      (t, failure)
+    }
+    val first = writes.headOption.flatMap(w =>
+      try { w(); None } catch { case e: Throwable => Some(e) })
+    var interrupted = false
+    val rest = helpers.map { case (t, failure) =>
+      while (t.isAlive) try t.join() catch {
+        case _: InterruptedException => interrupted = true
+      }
+      Option(failure.get)
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    (first +: rest).flatten match {
+      case e +: others => others.foreach(e.addSuppressed); throw e
+      case _ =>
+    }
+  }
+
   /** Bucketed managed table: co-locates future joins/aggregations on
     * `bucketCols` — two tables bucketed the same way join with NO exchange
     * on either side (verified in ScaleSpec by plan inspection). At 100 TB

@@ -1,7 +1,7 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Readers (SURVEY §2.1 S1-S4).
@@ -39,9 +39,45 @@ object Sources {
     * Spark globs, unions by position (UNION ALL semantics, O5) and strips each
     * file's header row correctly. Kept schemaless so column validation (F1)
     * sees what's actually in the files — an imposed schema would mask missing
-    * or reordered columns. */
+    * or reordered columns.
+    *
+    * Opening runs no Spark job: the columns come from [[headerSchema]], a
+    * driver-side read of one header line, and the scan is declared with that
+    * all-string schema. Spark's own header inference runs a job per call,
+    * before any data is read. */
   def csvRaw(spark: SparkSession, paths: String*): DataFrame =
-    spark.read.option("header", "true").csv(paths: _*)
+    spark.read.schema(headerSchema(spark, paths)).option("header", "true")
+      .csv(paths: _*)
+
+  /** The columns Spark's CSV header inference gives `paths`, as an
+    * all-string schema, without a Spark job.
+    *
+    * Inference reads the first non-blank line of the first file split, and
+    * splits are ordered by size, largest first: that is the first non-blank
+    * line of the largest non-hidden, non-empty file the paths match (ties in
+    * listing order, as Spark lists them). That line is read on the driver
+    * and named by Spark's own CSV code (`GraftShims.csvHeaderSchema`). No
+    * matched file with a non-blank line means no columns, as with inference
+    * over empty files; a path that matches nothing also yields none here,
+    * and the scan declared on it then fails with Spark's path-not-found
+    * error. */
+  private def headerSchema(spark: SparkSession, paths: Seq[String]): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // Spark's listing rule: hidden names are skipped below a root and for
+    // a root that is a file; a root directory is listed whatever its name
+    def hidden(s: FileStatus) = GraftShims.hiddenPathName(s.getPath.getName)
+    def leaves(fs: FileSystem, dir: FileStatus): Seq[FileStatus] =
+      fs.listStatus(dir.getPath).toSeq.filterNot(hidden).flatMap(s =>
+        if (s.isDirectory) leaves(fs, s) else Seq(s))
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      Option(fs.globStatus(path)).toSeq.flatten.flatMap(s =>
+        if (s.isDirectory) leaves(fs, s) else Seq(s).filterNot(hidden))
+    }
+    GraftShims.csvHeaderSchema(spark,
+      files.filter(_.getLen > 0).sortBy(-_.getLen).map(_.getPath))
+  }
 
   /** Conform a raw (string-typed) frame to a declared schema BY NAME: select
     * the declared columns in order and cast. Column order in the file is

@@ -111,6 +111,38 @@ object GraftShims {
         .asInstanceOf[scala.collection.mutable.HashMap[_, _]].size
     } catch { case scala.util.control.NonFatal(_) => -1 }
 
+  /** Whether Spark's file listing skips a file or directory of this name
+    * (`_`- and `.`-prefixed names, in-flight `._COPYING_` copies), so a
+    * driver-side listing matches the files a scan reads. `HadoopFSUtils`
+    * is private[spark], hence the shim. */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The all-string schema Spark's CSV header inference (`header=true`, no
+    * type inference) derives from the first of `files` that holds a
+    * non-blank line: that line as Spark's line reader reads it (codec,
+    * encoding, blank lines), split by Spark's CSV parser (quoting, BOM) and
+    * named by its `makeSafeHeader` (blank and duplicate names, case
+    * sensitivity) — the steps of `TextInputCSVDataSource.inferFromDataset`,
+    * on the driver and with no Spark job. No such line means no columns,
+    * as with inference. The CSV reader internals are private to Spark,
+    * hence the shim. */
+  def csvHeaderSchema(spark: SparkSession, files: Seq[org.apache.hadoop.fs.Path])
+      : types.StructType = {
+    import execution.datasources.csv.CSVUtils
+    val ss = spark.asInstanceOf[classic.SparkSession].sessionState
+    val options = new catalyst.csv.CSVOptions(Map("header" -> "true"),
+      ss.conf.csvColumnPruning, ss.conf.sessionLocalTimeZone)
+    val hadoopConf = ss.newHadoopConf()
+    val line = files.iterator
+      .flatMap(CSVUtils.readHeaderLine(_, options, hadoopConf)).nextOption()
+    val row = line.flatMap(l => Option(
+      new com.univocity.parsers.csv.CsvParser(options.asParserSettings).parseLine(l)))
+    types.StructType(row.toSeq.flatMap(r =>
+      CSVUtils.makeSafeHeader(r, ss.conf.caseSensitiveAnalysis, options))
+      .map(types.StructField(_, types.StringType)))
+  }
+
   /** Block until the async listener bus has delivered every queued
     * event. A SparkListener accumulating task metrics over a code
     * region reads ZEROS (or a prior region's stragglers) without this —

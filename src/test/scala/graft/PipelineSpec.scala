@@ -1,6 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
+import org.apache.spark.sql.{AnalysisException, GraftShims}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{
+  SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 import graft.etl.Validate
 import graft.model.Schemas
@@ -40,10 +49,56 @@ class PipelineSpec extends SparkSpec {
     (in, out)
   }
 
+  /** Runs `body` on an empty cache and checks it leaves the cache empty:
+    * the run's persisted frame must be released on every exit path. */
+  private def noCacheLeak[A](body: => A): A = {
+    spark.catalog.clearCache()
+    val a = body
+    assert(spark.sharedState.cacheManager.isEmpty, "Pipeline.run leaked a cached frame")
+    a
+  }
+
+  /** Rows the CSV scans produce while `body` runs, over every task: the
+    * scans' "number of output rows" metrics, found in the SQL plans Spark
+    * reports (a persisted frame's plan included) and summed from the task
+    * updates. Task input records would not do: a read of a persisted frame
+    * counts one input record per cached batch. */
+  private def csvRowsScanned(body: => Unit): Long = {
+    val scanMetrics = ConcurrentHashMap.newKeySet[Long]()
+    val updates = new ConcurrentHashMap[Long, Long]()
+    def scans(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.startsWith("Scan csv"))
+        p.metrics.filter(_.name == "number of output rows")
+          .foreach(m => scanMetrics.add(m.accumulatorId))
+      p.children.foreach(scans)
+    }
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.foreach(a => a.update.foreach {
+          case v: Long => updates.merge(a.id, v, _ + _)
+          case _ =>
+        })
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => scans(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    GraftShims.drainListenerBus(spark)
+    sc.addSparkListener(listener)
+    try {
+      body
+      GraftShims.drainListenerBus(spark)
+    } finally sc.removeSparkListener(listener)
+    scanMetrics.asScala.toSeq.map(updates.getOrDefault(_, 0L)).sum
+  }
+
   test("end-to-end: multi-file streams → KPI tables, reference semantics") {
     val (in, out) = fixtures()
-    val res = Pipeline.run(spark, s"$in/streams", s"$in/users.csv",
-      s"$in/songs.csv", out.toString)
+    val res = noCacheLeak(Pipeline.run(spark, s"$in/streams",
+      s"$in/users.csv", s"$in/songs.csv", out.toString))
+    // the returned frames are lazy: collected after the run released its
+    // cache, they recompute from the inputs
     val Pipeline.Completed(genre, hourly) = res: @unchecked
 
     val g = genre.orderBy("track_genre").collect()
@@ -81,18 +136,57 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/genre_kpis").count() == first)
   }
 
+  test("read once: each CSV is scanned once per run") {
+    val (in, out) = fixtures()
+    // 6 stream rows over two files + 3 songs; users.csv is only validated
+    val rows = csvRowsScanned(Pipeline.run(spark, s"$in/streams",
+      s"$in/users.csv", s"$in/songs.csv", out.toString))
+    assert(rows == 6 + 3)
+  }
+
   test("empty input dir stops the run (S1 branch)") {
     val empty = Files.createTempDirectory("graft_empty")
-    val res = Pipeline.run(spark, empty.toString, "x", "y", "z")
+    val res = noCacheLeak(Pipeline.run(spark, empty.toString, "x", "y", "z"))
     assert(res == Pipeline.NoStreams)
+  }
+
+  test("a failed KPI write is thrown after the other write ends, cache released") {
+    val (in, out) = fixtures()
+    // a plain file where the hourly table's directory belongs
+    Files.writeString(out.resolve("hourly_kpis"), "not a directory")
+    spark.catalog.clearCache()
+    val err = intercept[Exception](Pipeline.run(spark, s"$in/streams",
+      s"$in/users.csv", s"$in/songs.csv", out.toString))
+    assert(spark.sharedState.cacheManager.isEmpty, s"cache leaked after $err")
+    // the genre write had committed when the error surfaced
+    val genre = out.resolve("genre_kpis")
+    assert(Files.exists(genre.resolve("date=2024-06-25")))
+    assert(!genre.toFile.list().exists(_.startsWith(".spark-staging")))
+    assert(spark.read.parquet(genre.toString).count() == 2)
+  }
+
+  test("a missing users.csv still fails with Spark's path-not-found error") {
+    val (in, out) = fixtures()
+    val e = intercept[AnalysisException](Pipeline.run(spark, s"$in/streams",
+      s"$in/nope.csv", s"$in/songs.csv", out.toString))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
+  test("a 0-byte songs.csv has no columns: the run stops at validation") {
+    val (in, out) = fixtures()
+    write(in, "empty_songs.csv")
+    val res = noCacheLeak(Pipeline.run(spark, s"$in/streams",
+      s"$in/users.csv", s"$in/empty_songs.csv", out.toString))
+    assert(res == Pipeline.InvalidColumns(Seq(
+      Validate.MissingColumns("songs", Schemas.requiredSongCols))))
   }
 
   test("missing required columns stop the run (F1 branch)") {
     val (in, out) = fixtures()
     // users file lacking user_country
     write(in, "bad_users.csv", "user_id,user_name", "1,ann")
-    val res = Pipeline.run(spark, s"$in/streams", s"$in/bad_users.csv",
-      s"$in/songs.csv", out.toString)
+    val res = noCacheLeak(Pipeline.run(spark, s"$in/streams",
+      s"$in/bad_users.csv", s"$in/songs.csv", out.toString))
     res match {
       case Pipeline.InvalidColumns(errs) =>
         assert(errs.exists(e => e.table == "users" &&

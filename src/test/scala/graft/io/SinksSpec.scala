@@ -78,6 +78,51 @@ class SinksSpec extends SparkSpec {
       .agg(sum("unique_listeners")).head().getLong(0) == 0L)
   }
 
+  test("parquetAll: concurrent writes keep the caller's local properties; " +
+       "every write has ended before it returns or throws") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.udf
+    val dir = Files.createTempDirectory("graft_all")
+    val a = Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("date", "n")
+    // the second output is written on a helper thread and outlasts the first
+    val slow = udf { (s: String) => Thread.sleep(1500); s }.asNondeterministic()
+    val b = Seq(("2024-01-01", "x")).toDF("date", "s").select($"date", slow($"s").as("s"))
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(String.valueOf(e.properties.getProperty("graft.spec.tag")))
+    }
+    org.apache.spark.sql.GraftShims.drainListenerBus(spark)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", "daily")
+    try Sinks.parquetAll(Seq(a -> s"$dir/a", b -> s"$dir/b"), Seq("date"))
+    finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      org.apache.spark.sql.GraftShims.drainListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    assert(spark.read.parquet(s"$dir/a").count() == 2)
+    assert(spark.read.parquet(s"$dir/b").count() == 1)
+    assert(!tags.isEmpty && tags.toArray.forall(_ == "daily"), tags)
+
+    // both writes fail, the second late: the first output's error is
+    // thrown, after the second has failed too, which rides along suppressed
+    def mentions(t: Throwable, text: String): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(text))
+    val late = udf { (s: String) =>
+      Thread.sleep(1500); if (s.nonEmpty) sys.error("late failure"); s
+    }.asNondeterministic()
+    val failing = Seq(("2024-01-01", "x")).toDF("date", "s")
+      .select($"date", late($"s").as("s"))
+    Files.writeString(dir.resolve("blocked"), "not a directory")
+    val e = intercept[Exception](Sinks.parquetAll(
+      Seq(a -> s"$dir/blocked", failing -> s"$dir/late"), Seq("date")))
+    assert(!mentions(e, "late failure"), e)
+    assert(e.getSuppressed.exists(mentions(_, "late failure")),
+      e.getSuppressed.toSeq)
+  }
+
   test("connectedComponents returns empty for an empty edge list (no NPE)") {
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.connectedComponents(empty).isEmpty)
