@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared session builder for the bench harnesses (Bench / BenchOne /
@@ -34,6 +38,16 @@ object HarnessSession {
       else None
     }
 
+  /** Whether `dir` is (or, once created, will be) on tmpfs: the
+    * filesystem type of its nearest existing ancestor. A path prefix would
+    * not do: tmpfs can be mounted anywhere, and a `/dev/shm` symlink or
+    * bind mount may point at disk. */
+  private[graft] def onTmpfs(dir: String): Boolean = {
+    val existing = Iterator.iterate(Paths.get(dir).toAbsolutePath.normalize)(_.getParent)
+      .takeWhile(_ != null).find(Files.exists(_))
+    existing.exists(p => Try(Files.getFileStore(p).`type`).toOption.contains("tmpfs"))
+  }
+
   def build(defaultCpus: String = "4"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
@@ -59,7 +73,7 @@ object HarnessSession {
       // sendfile avoids double-buffering).
       .config("spark.file.transferTo",
         sys.props.getOrElse("spark.file.transferTo",
-          if (resolvedLocalDir.startsWith("/dev/shm")) "false" else "true"))
+          if (resolvedLocalDir.split(",").forall(onTmpfs)) "false" else "true"))
       // Larger shuffle write buffers (32k → 128k): fewer write syscalls
       // per produced shuffle file; +A/B on top of transferTo=false:
       // streaming_admission 1.74→1.48 s, f_dsir 1.23→1.13 s, rest flat.

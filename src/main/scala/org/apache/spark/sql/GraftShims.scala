@@ -51,21 +51,70 @@ object GraftShims {
     * (skipping them would add one exchange per round). */
   def statsFreeLocalCheckpoint(df: Dataset[Row]): Dataset[Row] = {
     val cds = df.asInstanceOf[classic.Dataset[Row]]
+    val internalRdd = cds.queryExecution.toRdd.map(_.copy())
+    internalRdd.localCheckpoint()
+    rowsFrame(cds, internalRdd, keepStats = false)
+  }
+
+  /** `df`'s rows, computed now and kept as deserialized `UnsafeRow`s at
+    * MEMORY_AND_DISK, plus a frame that reads them. The caller releases the
+    * rows with `rdd.unpersist()`; until then every plan over the frame reads
+    * the kept rows instead of recomputing `df`.
+    *
+    * Why rows and not `Dataset.persist`: the columnar cache builds
+    * compressed column batches (dictionary and run-length statistics for
+    * every string column of every batch) and each scan of it decodes them
+    * back into rows. A cache read a handful of times pays that encoding for
+    * nothing; here the stored rows are read as they are.
+    *
+    * - One job materializes the rows, inside a SQL execution of `df`'s
+    *   plan, so listeners see `df`'s scans and metrics as for any query,
+    *   and later plans over the frame start with every block in place
+    *   (several plans computing one block at once would wait on its lock).
+    *   If that job fails the rows are released before the error is
+    *   rethrown.
+    * - The lineage is kept: after `unpersist()` the frame, and any frame
+    *   built on it, recomputes `df`. A local checkpoint would cut it.
+    * - The frame keeps `df`'s estimated statistics (as `Dataset.checkpoint`
+    *   does), so later plans over it make the same broadcast choices.
+    *
+    * `Dataset.ofRows` and `LogicalRDD` are private[sql], hence the shim. */
+  def rowCache(df: Dataset[Row]): (Dataset[Row], org.apache.spark.rdd.RDD[_]) = {
+    val cds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = cds.queryExecution
+    val rows = execution.SQLExecution.withNewExecutionId(qe, Some("rowCache")) {
+      val rdd = qe.toRdd.map(_.copy())
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try rdd.count() catch { case e: Throwable => rdd.unpersist(); throw e }
+      rdd
+    }
+    (rowsFrame(cds, rows, keepStats = true), rows)
+  }
+
+  /** A frame over `rows`, the materialized rows of `cds`: a `LogicalRDD`
+    * with `cds`'s output, output partitioning and ordering (skipping them
+    * would add an exchange downstream), and `cds`'s estimated statistics
+    * only when `keepStats`. */
+  private def rowsFrame(cds: classic.Dataset[Row],
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      keepStats: Boolean): Dataset[Row] = {
     val qe = cds.queryExecution
     val physical = qe.executedPlan
-    val internalRdd = qe.toRdd.map(_.copy())
-    internalRdd.localCheckpoint()
     def firstLeafPartitioning(p: catalyst.plans.physical.Partitioning)
         : catalyst.plans.physical.Partitioning = p match {
       case c: catalyst.plans.physical.PartitioningCollection =>
         firstLeafPartitioning(c.partitionings.head)
       case other => other
     }
+    val (stats, constraints) =
+      if (keepStats)
+        execution.LogicalRDD.rewriteStatsAndConstraints(qe.analyzed, qe.optimizedPlan)
+      else (None, None)
     classic.Dataset.ofRows(cds.sparkSession,
-      execution.LogicalRDD(qe.analyzed.output, internalRdd,
+      execution.LogicalRDD(qe.analyzed.output, rows,
         firstLeafPartitioning(physical.outputPartitioning),
         physical.outputOrdering, cds.isStreaming)(
-        cds.sparkSession, None, None))
+        cds.sparkSession, stats, constraints))
   }
 
   /** The table's bucket count (None when the table exists unbucketed).

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerTaskEnd}
 import org.apache.spark.sql.{AnalysisException, GraftShims}
-import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlanInfo}
 import org.apache.spark.sql.execution.ui.{
   SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
@@ -49,29 +49,34 @@ class PipelineSpec extends SparkSpec {
     (in, out)
   }
 
-  /** Runs `body` on an empty cache and checks it leaves the cache empty:
-    * the run's persisted frame must be released on every exit path. */
+  /** Runs `body` with no cached frame and no persisted RDD and checks it
+    * leaves none: whatever the run keeps must be released on every exit
+    * path. */
   private def noCacheLeak[A](body: => A): A = {
-    spark.catalog.clearCache()
+    clearCaches()
     val a = body
-    assert(spark.sharedState.cacheManager.isEmpty, "Pipeline.run leaked a cached frame")
+    assertNoCache("Pipeline.run")
     a
   }
 
-  /** Rows the CSV scans produce while `body` runs, over every task: the
-    * scans' "number of output rows" metrics, found in the SQL plans Spark
-    * reports (a persisted frame's plan included) and summed from the task
-    * updates. Task input records would not do: a read of a persisted frame
-    * counts one input record per cached batch. */
-  private def csvRowsScanned(body: => Unit): Long = {
-    val scanMetrics = ConcurrentHashMap.newKeySet[Long]()
+  private def clearCaches(): Unit = {
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist())
+  }
+
+  private def assertNoCache(after: Any): Unit = {
+    assert(spark.sharedState.cacheManager.isEmpty, s"cached frame leaked after $after")
+    assert(sc.getPersistentRDDs.isEmpty, s"persisted RDD leaked after $after")
+  }
+
+  /** The SQL executions that start while `body` runs: every version of
+    * each one's physical plan (AQE re-plans included), and the task
+    * updates of every accumulator. */
+  private def sqlExecutions(body: => Unit)
+      : (Map[Long, Seq[SparkPlanInfo]], Map[Long, Long]) = {
+    val plans = new ConcurrentHashMap[Long, Seq[SparkPlanInfo]]()
     val updates = new ConcurrentHashMap[Long, Long]()
-    def scans(p: SparkPlanInfo): Unit = {
-      if (p.nodeName.startsWith("Scan csv"))
-        p.metrics.filter(_.name == "number of output rows")
-          .foreach(m => scanMetrics.add(m.accumulatorId))
-      p.children.foreach(scans)
-    }
+    def add(id: Long, p: SparkPlanInfo): Unit = plans.merge(id, Seq(p), _ ++ _)
     val listener = new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         e.taskInfo.accumulables.foreach(a => a.update.foreach {
@@ -79,8 +84,8 @@ class PipelineSpec extends SparkSpec {
           case _ =>
         })
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => scans(s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+        case s: SparkListenerSQLExecutionStart => add(s.executionId, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => add(u.executionId, u.sparkPlanInfo)
         case _ =>
       }
     }
@@ -90,7 +95,21 @@ class PipelineSpec extends SparkSpec {
       body
       GraftShims.drainListenerBus(spark)
     } finally sc.removeSparkListener(listener)
-    scanMetrics.asScala.toSeq.map(updates.getOrDefault(_, 0L)).sum
+    (plans.asScala.toMap, updates.asScala.toMap)
+  }
+
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+    p +: p.children.flatMap(nodes)
+
+  /** Rows the CSV scans produce while `body` runs, over every task: the
+    * scans' "number of output rows" metrics, found in the SQL plans Spark
+    * reports and summed from the task updates. Task input records would not
+    * do: a read of kept rows counts as input records too. */
+  private def csvRowsScanned(body: => Unit): Long = {
+    val (plans, updates) = sqlExecutions(body)
+    plans.values.flatten.flatMap(nodes).filter(_.nodeName.startsWith("Scan csv"))
+      .flatMap(_.metrics.filter(_.name == "number of output rows"))
+      .map(_.accumulatorId).toSeq.distinct.map(id => updates.getOrElse(id, 0L)).sum
   }
 
   test("end-to-end: multi-file streams → KPI tables, reference semantics") {
@@ -144,6 +163,32 @@ class PipelineSpec extends SparkSpec {
     assert(rows == 6 + 3)
   }
 
+  test("the KPI writes read the kept enriched rows, narrowed to the KPI columns") {
+    val (in, out) = fixtures()
+    var res: Pipeline.Outcome = null
+    val (plans, _) = sqlExecutions {
+      res = Pipeline.run(spark, s"$in/streams", s"$in/users.csv",
+        s"$in/songs.csv", out.toString)
+    }
+    val writes = plans.values.map(_.flatMap(nodes).map(_.nodeName))
+      .filter(_.exists(_.contains("InsertIntoHadoopFsRelationCommand"))).toSeq
+    assert(writes.size == 2, plans)
+    writes.foreach { names =>
+      assert(names.contains("Scan ExistingRDD"), names)
+      assert(!names.exists(n => n.startsWith("Scan csv") ||
+        n.startsWith("InMemoryTableScan")), names)
+    }
+    val Pipeline.Completed(genre, hourly) = res: @unchecked
+    val kept = Seq(genre, hourly).flatMap(_.queryExecution.analyzed.collectLeaves())
+    assert(kept.nonEmpty && kept.forall(_.isInstanceOf[LogicalRDD]), kept)
+    kept.foreach(r => assert(r.output.map(_.name).toSet == Set("user_id",
+      "track_id", "date", "hour", "artists", "track_name", "popularity",
+      "duration_ms", "track_genre") && r.output.size == 9, r.output))
+    // the enriched plan's size estimate, not Spark's default for a relation
+    // of unknown size
+    kept.foreach(r => assert(r.stats.sizeInBytes < Long.MaxValue, r.stats))
+  }
+
   test("empty input dir stops the run (S1 branch)") {
     val empty = Files.createTempDirectory("graft_empty")
     val res = noCacheLeak(Pipeline.run(spark, empty.toString, "x", "y", "z"))
@@ -154,15 +199,31 @@ class PipelineSpec extends SparkSpec {
     val (in, out) = fixtures()
     // a plain file where the hourly table's directory belongs
     Files.writeString(out.resolve("hourly_kpis"), "not a directory")
-    spark.catalog.clearCache()
+    clearCaches()
     val err = intercept[Exception](Pipeline.run(spark, s"$in/streams",
       s"$in/users.csv", s"$in/songs.csv", out.toString))
-    assert(spark.sharedState.cacheManager.isEmpty, s"cache leaked after $err")
+    assertNoCache(err)
     // the genre write had committed when the error surfaced
     val genre = out.resolve("genre_kpis")
     assert(Files.exists(genre.resolve("date=2024-06-25")))
     assert(!genre.toFile.list().exists(_.startsWith(".spark-staging")))
     assert(spark.read.parquet(genre.toString).count() == 2)
+  }
+
+  test("a failed materialization of the enriched rows releases them") {
+    val (in, out) = fixtures()
+    // a non-numeric user_id fails its cast (ANSI, Spark's default) in the
+    // job that computes the kept rows, before any write starts
+    write(in.resolve("streams"), "b3.csv",
+      "user_id,track_id,listen_time", "nobody,t1,2024-06-25 10:00:00")
+    clearCaches()
+    val err = intercept[Exception](Pipeline.run(spark, s"$in/streams",
+      s"$in/users.csv", s"$in/songs.csv", out.toString))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("CAST_INVALID_INPUT"))), err)
+    assertNoCache(err)
+    assert(!Files.exists(out.resolve("genre_kpis")))
+    assert(!Files.exists(out.resolve("hourly_kpis")))
   }
 
   test("a missing users.csv still fails with Spark's path-not-found error") {
