@@ -40,12 +40,17 @@ with DAG(
         task_id="run_music_streaming_pipeline",
         application="graft-assembly.jar",
         java_class="graft.PipelineMain",
+        name="graft-music-streaming-etl",
         application_args=[
             "s3a://streaming-data-bucket/batches/*.csv",
             "s3a://dims/users.csv",
             "s3a://dims/songs.csv",
             "s3a://kpi-warehouse/",
         ],
+        # Both confs are already the job's defaults (HarnessSession sets
+        # the UTC session zone; AQE is on by Spark's default), stated here
+        # for the reader. Any conf passed here wins over HarnessSession's
+        # defaults, e.g. spark.sql.shuffle.partitions on a cluster.
         conf={
             "spark.sql.session.timeZone": "UTC",
             "spark.sql.adaptive.enabled": "true",

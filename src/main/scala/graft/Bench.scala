@@ -126,15 +126,10 @@ object Bench {
             failed += name
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
-          finally {
-            // per-query scratch caches (dedup self-join sides) die with
-            // the query — inside the timing, honestly charging release to
-            // its owner; ditto streaming state-store unload, which is the
-            // cost of the query having created per-run stores at all
-            ext.Dedup.releaseScratch()
-            if (name.startsWith("streaming_"))
-              streaming.StreamHygiene.release(spark)
-          }
+          // the release is inside the timing, honestly charging it to its
+          // owner: the cost of the query having created scratch caches and
+          // per-run state stores at all
+          finally SparkEntry.release(spark, name)
           name -> (System.nanoTime() - t0) / 1e9
         }
       val c = canaryOnce(); canaries ++= c
@@ -193,11 +188,7 @@ object Bench {
             System.err.println(s"[bench] retime of $name failed: ${e.getMessage}")
             false
           }
-          finally {
-            ext.Dedup.releaseScratch()
-            if (name.startsWith("streaming_"))
-              streaming.StreamHygiene.release(spark)
-          }
+          finally SparkEntry.release(spark, name)
         name -> BenchArbitration.merged(t, ok, (System.nanoTime() - t0) / 1e9)
       } else name -> t
     }

@@ -22,14 +22,10 @@ object BenchOne {
         val cached = df.queryExecution.executedPlan.toString
           .contains("InMemoryTableScan")
         println(f"pass $p $name%-28s $sec%7.2fs cachedScan=$cached")
-        ext.Dedup.releaseScratch()
-        // same hygiene as Bench/Verify: a streaming query's per-run
-        // checkpoints register JVM-global state-store providers whose
-        // maintenance threads outlive the query — without the release,
-        // later passes slow down and this arbiter would misread its OWN
-        // accumulation as the arbitrated query's regression
-        if (name.startsWith("streaming_"))
-          streaming.StreamHygiene.release(spark)
+        // same release as Bench/Verify: without it later passes slow down
+        // and this arbiter would misread its OWN accumulation as the
+        // arbitrated query's regression
+        SparkEntry.release(spark, name)
       }
     }
     spark.stop()

@@ -18,8 +18,7 @@ object CgDiffProbe {
       .METRIC_COMPILATION_TIME.getCount
     // run once at WARN to absorb first-compiles shared with the session
     q(name)(spark, dir).write.format("noop").mode("overwrite").save()
-    ext.Dedup.releaseScratch()
-    if (name.startsWith("streaming_")) streaming.StreamHygiene.release(spark)
+    SparkEntry.release(spark, name)
     import org.apache.logging.log4j.core.config.Configurator
     import org.apache.logging.log4j.Level
     Configurator.setLevel(
@@ -28,8 +27,7 @@ object CgDiffProbe {
     (1 to runs).foreach { i =>
       val c0 = compiles
       q(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      ext.Dedup.releaseScratch()
-      if (name.startsWith("streaming_")) streaming.StreamHygiene.release(spark)
+      SparkEntry.release(spark, name)
       println(s"CGDIFF run $i compiles=${compiles - c0}")
     }
     spark.stop()

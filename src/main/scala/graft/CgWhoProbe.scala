@@ -13,8 +13,7 @@ object CgWhoProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val q = SparkEntry.queries
     q(name)(spark, dir).write.format("noop").mode("overwrite").save()
-    ext.Dedup.releaseScratch()
-    if (name.startsWith("streaming_")) streaming.StreamHygiene.release(spark)
+    SparkEntry.release(spark, name)
     val seen = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicLong]()
     @volatile var sampling = true
@@ -40,8 +39,7 @@ object CgWhoProbe {
     sampler.setDaemon(true); sampler.start()
     (1 to 3).foreach { i =>
       q(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      ext.Dedup.releaseScratch()
-      if (name.startsWith("streaming_")) streaming.StreamHygiene.release(spark)
+      SparkEntry.release(spark, name)
     }
     sampling = false; Thread.sleep(50)
     import scala.jdk.CollectionConverters._

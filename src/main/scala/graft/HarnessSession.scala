@@ -1,42 +1,72 @@
 package graft
 
+import java.io.File
 import java.nio.file.{Files, Paths}
 
 import scala.util.Try
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** Shared session builder for the bench harnesses (Bench / BenchOne /
-  * BenchGrowth), honoring the same SPARK_GRAFT_MASTER override as
-  * [[Verify]]: `local-cluster[n,cores,mem]` forks real Worker-launched
-  * executor JVMs, putting genuine process-boundary serialization and
-  * shuffle wire costs under the TIMED path — the last term of the 100×
-  * extrapolation `local[*]` cannot measure (there, broadcast handoff is a
-  * same-classloader reference and "shuffle" is an in-heap array move). */
+/** The one session definition. Every entry point builds its session here:
+  * the production job ([[PipelineMain]]), the DuckDB differential
+  * ([[Verify]]), the benches and probe mains, and the test suite
+  * (`SparkSpec`). So what is verified is what is measured and what is
+  * shipped; `SessionGuardSpec` fails on any other `SparkSession.builder`.
+  *
+  * '''Precedence.''' [[defaults]] is one table, applied with
+  * `SparkConf.setIfMissing` over the `spark.*` system properties. An
+  * explicit setting therefore wins for every key: a `-Dspark.x=…`, and
+  * spark-submit's `--conf`/`--master`, which reach the driver as system
+  * properties. Three environment variables feed the defaults:
+  *   - `SPARK_GRAFT_CPUS` (else `defaultCpus`): the local parallelism and
+  *     the shuffle partitions;
+  *   - `SPARK_GRAFT_MASTER`: the master when `spark.master` is unset (else
+  *     `local[cpus]`). `local-cluster[n,cores,mem]` forks real
+  *     Worker-launched executor JVMs, which puts process-boundary
+  *     serialization and shuffle wire costs under the timed and verified
+  *     path; `local[*]` cannot show them (there a broadcast is a
+  *     same-classloader reference and a shuffle an in-heap array move);
+  *   - `SPARK_GRAFT_LOCAL_DIR`: the shuffle/spill directory default.
+  *
+  * '''Production notes.'''
+  *   - `GraftCheckpointFileManager` is local-file only. For HDFS/S3
+  *     checkpoints pass the stock manager: `--conf
+  *     spark.sql.streaming.checkpointFileManagerClass=org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`.
+  *   - The tmpfs `spark.local.dir` default yields to the dirs a cluster
+  *     manager sets (`SPARK_LOCAL_DIRS`, YARN's `LOCAL_DIRS`): it is not
+  *     set then, and `spark.file.transferTo` is decided from those dirs.
+  *   - Shuffle partitions default to the local core count. A cluster run
+  *     sets `spark.sql.shuffle.partitions` explicitly, as
+  *     `deploy/cluster-submit.sh` does. */
 object HarnessSession {
-  /** `defaultCpus` is the fallback when SPARK_GRAFT_CPUS is unset — the
-    * arbiters default small (4), the growth harness to the full box (32,
-    * matching its committed tables). */
+
   /** Shuffle/spill scratch directory. Spark's default is /tmp, which on
-    * this box is a block device; stack-sampling the bench (r16) showed
-    * ~30% of shuffle-stage task wall inside shuffle-file syscalls
+    * the bench host is a block device; stack-sampling the bench (r16)
+    * showed ~30% of shuffle-stage task wall inside shuffle-file syscalls
     * (FileOutputStream.open0, index-file commit, mmap) — f_dsir_weights
     * 3.9→2.7 s and text_surprisal_gate 2.65→1.8 s isolated just by
-    * moving spark.local.dir to tmpfs. This is the standard "point
-    * local dirs at the fastest local storage" tuning (Spark docs;
-    * optimization guide §2.1 — local disk can be the tighter shuffle
-    * limit): on a production cluster it is striped NVMe via
-    * SPARK_LOCAL_DIRS; in a RAM-rich sandbox the tmpfs IS that disk.
-    * Parameterized (SPARK_GRAFT_LOCAL_DIR wins; explicit -D wins too
-    * since builder config only fills unset keys), default tmpfs only
-    * when present and writable. */
-  private def localDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite)
-        Some("/dev/shm/graft-spark-local")
+    * moving spark.local.dir to tmpfs. This is the standard "point local
+    * dirs at the fastest local storage" tuning (Spark docs; optimization
+    * guide §2.1 — local disk can be the tighter shuffle limit): on a
+    * production cluster it is striped NVMe via SPARK_LOCAL_DIRS; in a
+    * RAM-rich sandbox the tmpfs IS that disk. Default tmpfs only when
+    * present and writable. */
+  private def localDir(env: Map[String, String]): Option[String] =
+    env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
+      val shm = new File("/dev/shm")
+      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-spark-local")
       else None
     }
+
+  /** The dirs a cluster manager hands Spark, which it uses ahead of
+    * `spark.local.dir` — the order of `Utils.getConfiguredLocalDirs`. */
+  private def managerDirs(env: Map[String, String]): Option[Seq[String]] =
+    (if (env.contains("CONTAINER_ID")) env.get("LOCAL_DIRS").map(_.split(","))
+     else None)
+      .orElse(env.get("SPARK_EXECUTOR_DIRS").map(_.split(File.pathSeparator)))
+      .orElse(env.get("SPARK_LOCAL_DIRS").map(_.split(",")))
+      .map(_.toSeq)
 
   /** Whether `dir` is (or, once created, will be) on tmpfs: the
     * filesystem type of its nearest existing ancestor. A path prefix would
@@ -48,15 +78,24 @@ object HarnessSession {
     existing.exists(p => Try(Files.getFileStore(p).`type`).toOption.contains("tmpfs"))
   }
 
-  def build(defaultCpus: String = "4"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val resolvedLocalDir = sys.props.getOrElse("spark.local.dir",
-      localDir.getOrElse(sys.props.getOrElse("java.io.tmpdir", "/tmp")))
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", resolvedLocalDir)
+  /** The session's defaults for this environment and these system
+    * properties, in the order they are applied. `props` is read only to
+    * resolve the keys the later defaults depend on (master, local dirs). */
+  private[graft] def defaults(env: Map[String, String], props: Map[String, String],
+                              defaultCpus: String = "4"): Seq[(String, String)] = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val master = props.getOrElse("spark.master",
+      env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+    val managed = managerDirs(env)
+    val dirDefault = if (managed.isEmpty) localDir(env) else None
+    val dirs = managed.getOrElse(props.get("spark.local.dir").orElse(dirDefault)
+      .getOrElse(props.getOrElse("java.io.tmpdir", "/tmp")).split(",").toSeq)
+    Seq(
+      "spark.master" -> master,
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+    ) ++ dirDefault.map("spark.local.dir" -> _) ++ Seq(
       // Shuffle-file copy path, paired with the tmpfs local dir (r17):
       // the bypass-merge writer concatenates per-partition files via
       // FileChannel.transferTo, which on this path mmaps the source in
@@ -67,23 +106,18 @@ object HarnessSession {
       // over a plain buffered copy: spark.file.transferTo=false measured
       // f_dsir_weights 1.92→1.23 s, text_surprisal_gate 1.26→0.86 s,
       // dedup_setsim_pairs 1.12→0.95 s (isolated pass-3 A/B). The conf
-      // exists for exactly this class of filesystem quirk. Default only
-      // when the shuffle dirs ARE tmpfs; real-disk deployments keep
-      // Spark's default and re-measure (transferTo wins on NVMe where
+      // exists for exactly this class of filesystem quirk. False only
+      // when every dir Spark writes to IS tmpfs; real-disk deployments
+      // keep Spark's default and re-measure (transferTo wins on NVMe where
       // sendfile avoids double-buffering).
-      .config("spark.file.transferTo",
-        sys.props.getOrElse("spark.file.transferTo",
-          if (resolvedLocalDir.split(",").forall(onTmpfs)) "false" else "true"))
+      "spark.file.transferTo" -> (!dirs.forall(onTmpfs)).toString,
       // Larger shuffle write buffers (32k → 128k): fewer write syscalls
       // per produced shuffle file; +A/B on top of transferTo=false:
       // streaming_admission 1.74→1.48 s, f_dsir 1.23→1.13 s, rest flat.
       // Bounded: 128k × shuffle partitions × concurrent tasks ≈ 128 MB
       // transient worst-case at the 32-way local recipe.
-      .config("spark.shuffle.file.buffer",
-        sys.props.getOrElse("spark.shuffle.file.buffer", "128k"))
-      .config("spark.shuffle.unsafe.file.output.buffer",
-        sys.props.getOrElse("spark.shuffle.unsafe.file.output.buffer",
-          "128k"))
+      "spark.shuffle.file.buffer" -> "128k",
+      "spark.shuffle.unsafe.file.output.buffer" -> "128k",
       // Codegen class cache sized for a MULTI-QUERY session (r16): the
       // default 100-entry LRU is sized for one query's worth of codegen
       // units; a 221-query suite generates ~1,300 distinct units per
@@ -93,20 +127,16 @@ object HarnessSession {
       // 32.9 s at a large cache). 5000 holds two full passes with slack
       // (~1,300 classes ≈ tens of MB of metaspace); any long-lived
       // multi-query deployment (Thrift server, notebook cluster) wants
-      // the same. Env-overridable; an explicit -D wins.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.props.getOrElse("spark.sql.codegen.cache.maxEntries",
-          sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")))
+      // the same.
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
       // Canonical codegen class names (the conf exists for exactly this):
       // with the stage id embedded, structurally IDENTICAL stages from
       // different queries hash to different generated source and miss the
       // cache. Measured on the 70-query mini-suite: pass-1 compiles
       // 1,074→1,010 (wall 68.3→64.5 s), warm-pass compiles 42→19
       // (31.7→27.7 s). Cost: generated frames all read "GeneratedClass"
-      // instead of carrying the stage id — acceptable for a bench
-      // session, and an explicit -D restores the default.
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.props.getOrElse("spark.sql.codegen.useIdInClassName", "false"))
+      // instead of carrying the stage id.
+      "spark.sql.codegen.useIdInClassName" -> "false",
       // Session-artifact isolation OFF (r17): Spark 4 keys the codegen
       // cache on (context classloader, source), and with isolation on,
       // EVERY streaming query start clones the session into a fresh
@@ -117,47 +147,46 @@ object HarnessSession {
       // isolation off, CgDiffProbe), and one classloader + metaspace
       // footprint accumulated per run. The isolation exists to fence
       // per-session third-party artifacts (Spark Connect multi-tenancy);
-      // this engine adds none, so the single-tenant deployment setting
-      // is OFF — same class of fix as the codegen cache sizing above.
-      // Env-overridable; an explicit -D wins.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.props.getOrElse("spark.sql.artifact.isolation.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false")))
+      // this engine adds none, so the single-tenant setting is OFF.
+      "spark.sql.artifact.isolation.enabled" -> "false",
       // Fork-free local checkpoint I/O (r17): with no native Hadoop lib,
       // every checkpoint mkdir/create shells out a `chmod` (60 forks per
       // AvailableNow run measured) and writes a `.crc` twin per file.
       // GraftCheckpointFileManager keeps the atomic-rename commit
-      // contract over java.nio instead; local paths only (it rejects
-      // non-file schemes loudly — unset for HDFS/object-store
-      // checkpoints). Env-overridable; explicit -D wins.
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.props.getOrElse("spark.sql.streaming.checkpointFileManagerClass",
-          sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-            "org.apache.spark.sql.GraftCheckpointFileManager")))
-      .config("spark.sql.session.timeZone", "UTC")
-      // overridable default (builder .config beats -D; see Verify)
-      .config("spark.sql.adaptive.enabled",
-        sys.props.getOrElse("spark.sql.adaptive.enabled", "true"))
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      // forked executors get SPARK_HOME/jars but not this sbt build's
-      // classes dir (CNFE otherwise), and the JVM default timezone does
-      // not propagate (only SQL confs do) — same provisions as Verify
-      val classesDir = new java.io.File("target/scala-2.13/classes")
-        .getAbsolutePath
-      builder
-        .config("spark.executor.extraClassPath", classesDir)
-        // ParallelGC on executors for the same reason the driver recipe
-        // pins it (SCALE.md bench methodology r10: batch suite, no pause
-        // SLO — the throughput collector wins ~7% warm over G1); extra
-        // opts ride GRAFT_EXECUTOR_EXTRA_JAVA_OPTS for sweeps.
-        .config("spark.executor.extraJavaOptions",
-          "-Duser.timezone=UTC -XX:+UseParallelGC " +
-            sys.env.getOrElse("GRAFT_EXECUTOR_EXTRA_JAVA_OPTS", ""))
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
-    }
-    val spark = builder.getOrCreate()
+      // contract over java.nio instead; local paths only (see the
+      // production notes above).
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.GraftCheckpointFileManager",
+    ) ++ (if (!master.startsWith("local-cluster")) Nil else Seq(
+      // forked executors get SPARK_HOME/jars but not this build's classes
+      // dir (CNFE on the first task otherwise), and the JVM default
+      // timezone does not propagate (only SQL confs do). ParallelGC on
+      // executors for the same reason the driver recipe pins it
+      // (SCALE.md bench methodology r10: batch suite, no pause SLO — the
+      // throughput collector wins ~7% warm over G1).
+      "spark.executor.extraClassPath" ->
+        new File("target/scala-2.13/classes").getAbsolutePath,
+      "spark.executor.extraJavaOptions" -> "-Duser.timezone=UTC -XX:+UseParallelGC",
+      "spark.executor.memory" -> "3g",
+    ))
+  }
+
+  /** The session's conf: the `spark.*` entries of `props`, then every
+    * default they leave unset. */
+  private[graft] def conf(env: Map[String, String], props: Map[String, String],
+                          defaultCpus: String = "4"): SparkConf = {
+    val conf = new SparkConf(false)
+      .setAll(props.filter { case (k, _) => k.startsWith("spark.") })
+    defaults(env, props, defaultCpus).foreach { case (k, v) => conf.setIfMissing(k, v) }
+    conf
+  }
+
+  /** `defaultCpus` is the fallback when SPARK_GRAFT_CPUS is unset — the
+    * arbiters default small (4), the growth harness to the full box (32,
+    * matching its committed tables). */
+  def build(defaultCpus: String = "4"): SparkSession = {
+    val spark = SparkSession.builder()
+      .config(conf(sys.env, sys.props.toMap, defaultCpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -21,7 +21,7 @@ object PlanDump {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"plans/$tag/${name}_$suffix.txt"), txt)
       println(s"wrote plans/$tag/${name}_$suffix.txt")
-      ext.Dedup.releaseScratch()
+      SparkEntry.release(spark, name)
     }
     spark.stop()
   }

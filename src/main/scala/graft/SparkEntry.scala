@@ -43,6 +43,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
+  /** What every runner calls after each query: the per-query scratch caches
+    * (dedup self-join sides) die with the query, and a `streaming_*` query
+    * also unloads the state-store providers its per-run checkpoints
+    * registered (JVM-global: they outlive the query and degrade the whole
+    * session otherwise, see [[streaming.StreamHygiene]]). */
+  def release(spark: SparkSession, name: String): Unit = {
+    ext.Dedup.releaseScratch()
+    if (name.startsWith("streaming_")) streaming.StreamHygiene.release(spark)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     * Evaluate AFTER running queries: oracleAfter thunks render literals

@@ -13,7 +13,7 @@ object StackSample {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val q = SparkEntry.queries
     q(name)(spark, dir).write.format("noop").mode("overwrite").save()
-    ext.Dedup.releaseScratch()
+    SparkEntry.release(spark, name)
     val hist = new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.atomic.AtomicLong]()
     @volatile var sampling = true
@@ -33,7 +33,7 @@ object StackSample {
     sampler.setDaemon(true); sampler.start()
     (1 to 3).foreach { _ =>
       q(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      ext.Dedup.releaseScratch()
+      SparkEntry.release(spark, name)
     }
     sampling = false
     import scala.jdk.CollectionConverters._

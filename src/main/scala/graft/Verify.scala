@@ -54,11 +54,7 @@ object Verify {
       // query; streaming queries also unload the state-store providers
       // their per-run checkpoints registered (JVM-global — they outlive
       // the query and degrade the whole session otherwise)
-      finally {
-        ext.Dedup.releaseScratch()
-        if (name.startsWith("streaming_"))
-          streaming.StreamHygiene.release(spark)
-      }
+      finally SparkEntry.release(spark, name)
     }
     writeJsonMap(s"$outDir/_failures.json", failures.toMap)
     failures.toMap
@@ -69,55 +65,7 @@ object Verify {
     // optional substring filter for fast local iteration on a few queries;
     // the driver passes no pattern and always dumps the full surface
     val pattern = if (args.length > 2) args(2) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the harness run the SAME differential under
-    // `local-cluster[n,cores,mem]` — real Worker-launched executor JVMs,
-    // which serialize every custom Expression / typed Aggregator / broadcast
-    // over the wire, the one execution axis `local[*]` can never exercise
-    // (there, "serialization" is a same-classloader no-op for broadcasts and
-    // task binaries never cross a process boundary).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      // overridable (sys.props default) for the same reason as adaptive
-      // below: the memory-pressure sweep axis raises partition counts
-      // under a constrained heap, and a hard-coded value here would
-      // silently nullify that -D
-      .config("spark.sql.shuffle.partitions",
-        sys.props.getOrElse("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      // default-on, but overridable: builder .config BEATS -D system
-      // properties in Spark's precedence, so a hard-coded value here would
-      // silently nullify a GRAFT_EXTRA_JAVA_OPTS AQE-off sweep (found in
-      // round 9 — the r7 "AQE-off" matrix row had exactly that hole and
-      // was re-run after this fix)
-      .config("spark.sql.adaptive.enabled",
-        sys.props.getOrElse("spark.sql.adaptive.enabled", "true"))
-      // same fork-free local checkpoint manager the bench session uses
-      // (HarnessSession) — the differential must validate the exact
-      // streaming checkpoint path the bench times; overridable the same
-      // way for sweeps against the stock manager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        sys.props.getOrElse("spark.sql.streaming.checkpointFileManagerClass",
-          sys.env.getOrElse("SPARK_GRAFT_CKPT_FM",
-            "org.apache.spark.sql.GraftCheckpointFileManager")))
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      // Executor JVMs are forked by the in-process Worker from SPARK_HOME's
-      // launcher; they get SPARK_HOME/jars but NOT this sbt build's classes
-      // dir — without extraClassPath every graft class hits CNFE on the
-      // first task. The JVM default timezone is NOT propagated to forked
-      // executors (only SQL confs are), so pin -Duser.timezone=UTC there.
-      val classesDir = new java.io.File("target/scala-2.13/classes")
-        .getAbsolutePath
-      builder
-        .config("spark.executor.extraClassPath", classesDir)
-        .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_MEM", "3g"))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.build()
     // echo the effective hostile-mode switches so a sweep's artifact
     // proves which mode actually ran (not just which flags were passed)
     System.err.println("[verify] effective modes: adaptive=" +
@@ -134,8 +82,11 @@ object Verify {
       " forceSpillThreshold=" +
       spark.conf.get("spark.shuffle.spill.numElementsForceSpillThreshold",
         "none") +
-      " maxHeapMb=" +
-      (Runtime.getRuntime.maxMemory() / (1024 * 1024)))
+      " maxHeapMb=" + (Runtime.getRuntime.maxMemory() / (1024 * 1024)) +
+      // and every key the shared session definition sets: the artifact
+      // shows the differential ran the bench's confs
+      HarnessSession.defaults(sys.env, sys.props.toMap)
+        .map { case (k, _) => s" $k=${spark.conf.get(k)}" }.mkString)
     // one materialization of the shared enriched frame for the whole run;
     // never fatal — queries that don't touch it must still verify.
     // NonFatal only: an OOM/linkage error must abort the JVM, not cascade

@@ -1,0 +1,28 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every entry point builds its session through [[HarnessSession]]: a second
+  * builder would drift from the one definition the bench measures. */
+class SessionGuardSpec extends AnyFunSuite {
+  private val builder = """SparkSession\s*\.\s*builder""".r
+
+  private def scalaFiles(dir: String, recursive: Boolean): Seq[Path] = {
+    val stream = if (recursive) Files.walk(Paths.get(dir)) else Files.list(Paths.get(dir))
+    try stream.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally stream.close()
+  }
+
+  test("HarnessSession is the only session builder in src and tools") {
+    val files = scalaFiles("src/main/scala", recursive = true) ++
+      scalaFiles("src/test/scala", recursive = true) ++ scalaFiles("tools", recursive = false)
+    assert(files.exists(_.endsWith("graft/HarnessSession.scala")))
+    val offenders = files.filterNot(_.endsWith("graft/HarnessSession.scala"))
+      .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
+    assert(offenders.isEmpty, s"build the session with HarnessSession.build: $offenders")
+  }
+}

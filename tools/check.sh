@@ -26,7 +26,7 @@ done
 # forks 2 executor JVMs (4 cores / 4 GiB each) so every custom
 # Expression/Aggregator/broadcast actually crosses a process boundary
 # (SPARK_SCALA_VERSION is needed by the executor launcher's classpath
-# resolution; Verify adds the sbt classes dir to executor classpaths).
+# resolution; HarnessSession adds the sbt classes dir to executor classpaths).
 java $ADD_OPENS -Xmx8g ${GRAFT_EXTRA_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/spark/jars/*:target/scala-2.13/classes" \

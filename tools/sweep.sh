@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Re-run the full SCALE.md invariance matrix at HEAD: nine hostile-mode
 # differential sweeps, each expected to print "== 221 pass, 0 fail".
-# Verify echoes the EFFECTIVE mode switches per run (see the r9 note in
-# SCALE.md: builder .config beats -D, so trust the echo, not the flag).
+# Verify echoes the EFFECTIVE mode switches and session confs per run
+# (an explicit -Dspark.* wins over every HarnessSession default, but trust
+# the echo, not the flag: see the r9 note in SCALE.md).
 # Usage: tools/sweep.sh [sfDir]   (default /root/testdata/sf0.01)
 set -uo pipefail
 cd "$(dirname "$0")/.."
