@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session definition. Every entry point builds its session here:
   * the production job ([[PipelineMain]]), the DuckDB differential
-  * ([[Verify]]), the benches and probe mains, and the test suite
+  * ([[Verify]]), the benches and diagnostic mains, and the test suite
   * (`SparkSpec`). So what is verified is what is measured and what is
   * shipped; `SessionGuardSpec` fails on any other `SparkSession.builder`.
   *
@@ -144,8 +144,8 @@ object HarnessSession {
       // ExecutorClassLoader — so each of the ~12 streaming runs per
       // bench pass re-Janino'd its full plan (~130 units/pass; measured
       // via CodegenMetrics: 12 compiles per repeat run → 0 with
-      // isolation off, CgDiffProbe), and one classloader + metaspace
-      // footprint accumulated per run. The isolation exists to fence
+      // isolation off, OPTIMIZATION_r17.md fix 1), and one classloader +
+      // metaspace footprint accumulated per run. The isolation exists to fence
       // per-session third-party artifacts (Spark Connect multi-tenancy);
       // this engine adds none, so the single-tenant setting is OFF.
       "spark.sql.artifact.isolation.enabled" -> "false",

@@ -25,4 +25,21 @@ class SessionGuardSpec extends AnyFunSuite {
       .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
     assert(offenders.isEmpty, s"build the session with HarnessSession.build: $offenders")
   }
+
+  private val objectDecl = """\bobject\s+(\w+)""".r
+  private val mainDecl = """\bdef\s+main\s*\(""".r
+
+  test("src/main holds exactly the production, bench and diagnostic mains") {
+    val mains = scalaFiles("src/main/scala", recursive = true).flatMap { p =>
+      val src = Files.readString(p)
+      val objects = objectDecl.findAllMatchIn(src).map(m => (m.start, m.group(1))).toSeq
+      mainDecl.findAllMatchIn(src).flatMap(m => objects.filter(_._1 < m.start).lastOption)
+        .map(_._2)
+    }.toSet
+    val kept = Set("PipelineMain", "Verify", "Bench", "BenchGrowth", "BenchOne", "SuiteAttr",
+      "StackSample", "PlanDump")
+    assert(mains == kept, "one instrumentation path, not a new main per question: add the " +
+      "measurement as a SuiteAttr column or sample it with StackSample's thread and frame " +
+      s"filters (added ${mains -- kept}, missing ${kept -- mains})")
+  }
 }

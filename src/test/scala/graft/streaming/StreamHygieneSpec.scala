@@ -13,9 +13,10 @@ import graft.SparkSpec
   * outlive the query; [[StreamHygiene.release]] must drain them ALL, and
   * a later stream must transparently re-create what it needs (the
   * maintenance machinery restarts lazily). Without the release, provider
-  * count grows monotonically with every run — measured in BenchDrift as
+  * count grows monotonically with every run — measured in r6 as
   * 0 → 408 providers / 81 → 2129 live threads across 8 passes of the
-  * streaming suite, which degraded the whole r6 driver bench. */
+  * streaming suite, which degraded the whole r6 driver bench. SuiteAttr's
+  * `thr=` and `prov=` columns show both counts after every query. */
 class StreamHygieneSpec extends SparkSpec {
   import spark.implicits._
 
