@@ -6,7 +6,12 @@ import java.nio.file.{Files, Paths}
 import scala.util.Try
 
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, functions}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.types.IntegerType
+
+import graft.functions.{CosineSimilarityExpr, GeoMeanUdaf, RollingHashExpr}
+import graft.plans.ExpandDeferredWith
 
 /** The one session definition. Every entry point builds its session here:
   * the production job ([[PipelineMain]]), the DuckDB differential
@@ -28,6 +33,13 @@ import org.apache.spark.sql.SparkSession
   *     path; `local[*]` cannot show them (there a broadcast is a
   *     same-classloader reference and a shuffle an in-heap array move);
   *   - `SPARK_GRAFT_LOCAL_DIR`: the shuffle/spill directory default.
+  *
+  * '''Session state.''' [[install]] puts graft's optimizer rule, SQL
+  * functions and parquet read conf on a session; [[build]] calls it, and
+  * it is the one place in `src/main` that does (`SessionGuardSpec`). No
+  * query constructor or library read changes the session. A session not
+  * made by [[build]] (`spark.newSession()`, a spark-shell's `spark`)
+  * calls [[install]] itself before running graft queries.
   *
   * '''Production notes.'''
   *   - `GraftCheckpointFileManager` is local-file only. For HDFS/S3
@@ -188,6 +200,48 @@ object HarnessSession {
     val spark = SparkSession.builder()
       .config(conf(sys.env, sys.props.toMap, defaultCpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    install(spark)
     spark
+  }
+
+  /** Install graft's session state on `spark`. Idempotent, on the pattern
+    * of Pathling's `SqlStrategy.setup`:
+    *   - [[ExpandDeferredWith]] in `extraOptimizations`, which
+    *     SparkOptimizer runs as its LAST batch. It must stay there:
+    *     `injectOptimizerRule` lands in the operator-optimization batch,
+    *     where the expanded defs would be re-inlined by pushdown (see
+    *     [[graft.plans.DeferredWith]]);
+    *   - the SQL functions `cosine_similarity`, `rolling_hash` (the
+    *     codegen'd expressions) and `geomean` (the typed [[GeoMeanUdaf]]);
+    *   - `spark.sql.legacy.parquet.nanosAsLong=true`, forced rather than a
+    *     [[defaults]] entry: fixtures whose `events.ts` is TIMESTAMP(NANOS)
+    *     fail to read without it, and `io.Sources.normalizeTs` rebuilds
+    *     the timestamps from the longs. */
+  def install(spark: SparkSession): Unit = {
+    val extra = spark.experimental.extraOptimizations
+    if (!extra.contains(ExpandDeferredWith))
+      spark.experimental.extraOptimizations = extra :+ ExpandDeferredWith
+    val registry = spark.sessionState.functionRegistry
+    registry.createOrReplaceTempFunction("cosine_similarity", cosineSimilarity, "built-in")
+    registry.createOrReplaceTempFunction("rolling_hash", rollingHash, "built-in")
+    spark.udf.register("geomean", functions.udaf(GeoMeanUdaf))
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  }
+
+  private def cosineSimilarity(args: Seq[Expression]): Expression = {
+    require(args.length == 2,
+      s"cosine_similarity expects 2 arguments, got ${args.length}")
+    CosineSimilarityExpr(args(0), args(1))
+  }
+
+  private def rollingHash(args: Seq[Expression]): Expression = {
+    require(args.length == 3,
+      s"rolling_hash expects (str, k, stride), got ${args.length} args")
+    def intLit(e: Expression, name: String): Int = e match {
+      case Literal(v: Int, IntegerType) => v
+      case other => throw new IllegalArgumentException(
+        s"rolling_hash: $name must be an integer literal, got $other")
+    }
+    RollingHashExpr(args.head, intLit(args(1), "k"), intLit(args(2), "stride"))
   }
 }

@@ -37,9 +37,13 @@ object SparkEntry {
 
   private val all: Seq[QueryDef] = groups.flatMap(_.defs)
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+  /** Flagship query on the sf0.001 fixture; the smoke check wants rows > 0.
+    * The caller's session may not come from [[HarnessSession.build]] (a
+    * spark-shell's `spark`), so this installs graft's session state on it. */
+  def entry(spark: SparkSession): DataFrame = {
+    HarnessSession.install(spark)
     CoreQueries.genreKpis(spark, "/root/testdata/sf0.001")
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

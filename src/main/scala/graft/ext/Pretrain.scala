@@ -105,7 +105,6 @@ object Pretrain {
   /** Curate `docs` → (doc_id, n_tokens, split) for the surviving corpus. */
   def curate(docs: DataFrame, minScore: Double = 0.5, minTokens: Long = 10,
              wantLang: String = "en", idCol: String = "doc_id"): DataFrame = {
-    graft.plans.ExpandDeferredWith.install(docs.sparkSession)
     val raw = scatter(docs.select(col(idCol), col("text")))
     val gate = org.apache.spark.sql.GraftShims.column(curationGate(
       org.apache.spark.sql.GraftShims.expression(raw("text")),

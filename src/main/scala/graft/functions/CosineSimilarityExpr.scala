@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * score. A null ELEMENT also yields null (the HOF's product chain would),
   * and so does a ZERO-NORM side: cosine is undefined there, and legacy-mode
   * SQL division by zero is NULL — raw Java NaN would diverge from the HOF
-  * formulation this expression substitutes for (RewriteVectorOps). */
+  * formulation this expression substitutes for (`VectorFunctions.cosineHof`). */
 case class CosineSimilarityExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 

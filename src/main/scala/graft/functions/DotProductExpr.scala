@@ -13,10 +13,8 @@ import org.apache.spark.sql.types._
   * Nulls: null array → null (BinaryExpression default); MISMATCHED lengths
   * → null, matching zip_with's null-padding poisoning the aggregate; a
   * null ELEMENT on either side → null as well (the HOF's x*y goes null and
-  * the + chain propagates it). Mainly produced by
-  * [[graft.plans.RewriteVectorOps]], which rewrites the HOF pattern to
-  * this expression during optimization — the rewrite must not change any
-  * null outcome.
+  * the + chain propagates it). Built by `VectorFunctions.dot` in place of
+  * the HOF, so it must not change any value or null outcome.
   */
 case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression {

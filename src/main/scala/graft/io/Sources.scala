@@ -108,9 +108,10 @@ object Sources {
     *  - TIMESTAMP(MICROS,isAdjustedToUTC=true): already TimestampType,
     *    passes through.
     * Normalization is by ACTUAL column type, not table name or fixture
-    * vintage; all three shapes are pinned in TimestampShapeSpec. */
+    * vintage; all three shapes are pinned in TimestampShapeSpec. The
+    * nanos shape is read under `spark.sql.legacy.parquet.nanosAsLong`,
+    * which `HarnessSession.install` sets on the session. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/$name.parquet"
     // Explicit schema per the object scaladoc's no-inference-pass rule —
     // which this entry point itself violated until r16: a schema-less
@@ -133,12 +134,11 @@ object Sources {
   /** The memoized on-disk schema of a fixture parquet path — for callers
     * that need a schema WITHOUT a scan (the streaming sources must pass
     * one to `readStream`), so they stop paying the per-call
-    * schema-inference job `table` no longer pays. Read under the same
-    * nanosAsLong conf every consumer uses. */
-  def parquetSchema(spark: SparkSession, path: String): StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * schema-inference job `table` no longer pays. Read under the
+    * nanosAsLong conf `HarnessSession.install` sets, like every
+    * consumer. */
+  def parquetSchema(spark: SparkSession, path: String): StructType =
     schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-  }
 
   /** Normalize a `ts` column (if present) to session-zoned TimestampType —
     * see [[table]] for the three physical shapes this absorbs.

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.MergeInto
-import graft.functions.GeoMeanUdaf
 import graft.io.Sources
 
 /** Deep relational surface: the multiway star join, CDC merge-apply,
@@ -196,13 +195,14 @@ object RelationalQueries extends QueryGroup {
       |WHERE c.op IS NULL OR c.op <> 'D'
       |ORDER BY c_custkey""".stripMargin
 
-  /** Geometric mean per event type via the SQL-registered typed UDAF
-    * ([[GeoMeanUdaf]]) — the query text is plain SQL, proving the
+  /** Geometric mean per event type via the typed UDAF
+    * [[graft.functions.GeoMeanUdaf]],
+    * which `HarnessSession.install` registers as `geomean` — the query
+    * text is plain SQL, proving the
     * §2.10 extension surface reaches analysts, not just Scala callers.
     * Rounded to 6 dp on both engines (ln/exp are the one place the
     * repo's exact-arithmetic rules can't apply). */
   private def udafGeomean(s: SparkSession, dir: String): DataFrame = {
-    GeoMeanUdaf.register(s)
     Sources.table(s, dir, "events").createOrReplaceTempView("events_gm")
     // value > 0 on BOTH sides: the geometric mean is undefined at 0 and
     // DuckDB's ln(0) raises (seen at sf0.1); the UDAF's skip-nonpositive

@@ -88,8 +88,9 @@ object RunningCounts {
       "state.RocksDBStateStoreProvider")
     try {
       // nanos-vintage fixtures need the nanosAsLong conf even though `ts`
-      // is never selected (PARQUET_TYPE_ILLEGAL otherwise) — the memoized
-      // Sources.parquetSchema sets it and skips the per-call inference job
+      // is never selected (PARQUET_TYPE_ILLEGAL otherwise; the session
+      // carries it from HarnessSession.install) — the memoized
+      // Sources.parquetSchema skips the per-call inference job
       val schema =
         graft.io.Sources.parquetSchema(spark, s"$dir/events.parquet")
       implicit val inEnc: Encoder[(Long, String)] =

@@ -2,11 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.plans.ExpandDeferredWith
 
 /** The session definition is a pure function of (environment, system
-  * properties): the conf cases below resolve it without a SparkContext. */
-class HarnessSessionSpec extends AnyFunSuite {
+  * properties): the conf cases below resolve it without a SparkContext.
+  * The install cases check graft's session state on the built session,
+  * and that a bare session gets it only from [[HarnessSession.install]]. */
+class HarnessSessionSpec extends SparkSpec {
   private def fsType(p: String): String = Files.getFileStore(Paths.get(p)).`type`
 
   private def diskDir(): String = {
@@ -114,5 +116,60 @@ class HarnessSessionSpec extends AnyFunSuite {
       "spark.sql.artifact.isolation.enabled" -> "false",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         "org.apache.spark.sql.GraftCheckpointFileManager"))
+  }
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val graftFunctions = Seq("cosine_similarity", "rolling_hash", "geomean")
+
+  test("cosine_similarity is callable from SQL with no registration call") {
+    import spark.implicits._
+    Seq((Array(1.0f, 0.0f), Array(0.5f, 0.0f)))
+      .toDF("a", "b").createOrReplaceTempView("vecs")
+    val r = spark.sql(
+      "SELECT cosine_similarity(a, b) AS c FROM vecs").head()
+    assert(r.getDouble(0) == 1.0)
+  }
+
+  test("rolling_hash is callable from SQL with literal window args") {
+    import spark.implicits._
+    Seq("abcdefghij").toDF("t").createOrReplaceTempView("rh")
+    val arr = spark.sql("SELECT rolling_hash(t, 4, 2) AS h FROM rh")
+      .head().getSeq[Long](0)
+    assert(arr.nonEmpty)
+    // non-literal k must be rejected, not silently miscomputed
+    val e = intercept[Exception] {
+      spark.sql("SELECT rolling_hash(t, length(t), 2) FROM rh").collect()
+    }
+    assert(e.getMessage.contains("k must be an integer literal"))
+  }
+
+  test("geomean is callable from SQL with no registration call") {
+    import spark.implicits._
+    Seq(1.0, 9.0).toDF("x").createOrReplaceTempView("gm_install")
+    val r = spark.sql("SELECT geomean(x) FROM gm_install").head()
+    assert(math.abs(r.getDouble(0) - 3.0) < 1e-12)
+  }
+
+  test("a built session reads parquet nanos timestamps as longs") {
+    assert(spark.conf.get(nanosAsLong) == "true")
+  }
+
+  test("install twice leaves exactly one ExpandDeferredWith") {
+    def rules = spark.experimental.extraOptimizations.count(_ == ExpandDeferredWith)
+    assert(rules == 1, "build installs the rule")
+    HarnessSession.install(spark)
+    HarnessSession.install(spark)
+    assert(rules == 1)
+  }
+
+  test("a new session has none of graft's session state until install") {
+    val bare = spark.newSession()
+    assert(graftFunctions.forall(f => !bare.catalog.functionExists(f)))
+    assert(!bare.experimental.extraOptimizations.contains(ExpandDeferredWith))
+    assert(bare.conf.get(nanosAsLong) != "true")
+    HarnessSession.install(bare)
+    assert(graftFunctions.forall(bare.catalog.functionExists))
+    assert(bare.experimental.extraOptimizations.count(_ == ExpandDeferredWith) == 1)
+    assert(bare.conf.get(nanosAsLong) == "true")
   }
 }

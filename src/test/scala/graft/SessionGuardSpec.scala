@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every entry point builds its session through [[HarnessSession]]: a second
-  * builder would drift from the one definition the bench measures. */
+/** Every entry point builds its session through [[HarnessSession]], and only
+  * its `install` puts graft's rules, functions and confs on a session: a
+  * second builder or install point would drift from the one definition the
+  * bench measures. */
 class SessionGuardSpec extends AnyFunSuite {
   private val builder = """SparkSession\s*\.\s*builder""".r
 
@@ -24,6 +26,21 @@ class SessionGuardSpec extends AnyFunSuite {
     val offenders = files.filterNot(_.endsWith("graft/HarnessSession.scala"))
       .filter(p => builder.findFirstIn(Files.readString(p)).isDefined)
     assert(offenders.isEmpty, s"build the session with HarnessSession.build: $offenders")
+  }
+
+  private val sessionState =
+    """\bextraOptimizations\b|\bfunctionRegistry\b|\budf\s*\.\s*register\b|nanosAsLong""".r
+  private val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+
+  test("only HarnessSession.install changes graft's session state in src/main") {
+    val offenders = scalaFiles("src/main/scala", recursive = true)
+      .filterNot(_.endsWith("graft/HarnessSession.scala"))
+      .flatMap { p =>
+        val code = comment.replaceAllIn(Files.readString(p), "")
+        sessionState.findAllIn(code).map(m => s"$p: $m").toSeq
+      }
+    assert(offenders.isEmpty, "install optimizer rules, SQL functions and session confs in " +
+      s"HarnessSession.install, which every built session runs: $offenders")
   }
 
   private val objectDecl = """\bobject\s+(\w+)""".r

@@ -4,14 +4,14 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** GeoMeanUdaf: value semantics, the skip-nonpositive contract (the
-  * oracle query filters value > 0, so this path is pinned here), and
-  * buffer mergeability across partitions. */
+/** GeoMeanUdaf, as the `geomean` SQL function every built session has:
+  * value semantics, the skip-nonpositive contract (the oracle query
+  * filters value > 0, so this path is pinned here), and buffer
+  * mergeability across partitions. */
 class GeoMeanUdafSpec extends SparkSpec {
 
   test("geometric mean of a known set") {
     import spark.implicits._
-    GeoMeanUdaf.register(spark)
     Seq(2.0, 8.0).toDF("x").createOrReplaceTempView("gm1")
     val r = spark.sql("SELECT geomean(x) AS g FROM gm1").collect()(0)
     assert(math.abs(r.getDouble(0) - 4.0) < 1e-12)
@@ -19,7 +19,6 @@ class GeoMeanUdafSpec extends SparkSpec {
 
   test("non-positive inputs are skipped, not poisoning the group") {
     import spark.implicits._
-    GeoMeanUdaf.register(spark)
     Seq(2.0, 0.0, -3.0, 8.0).toDF("x").createOrReplaceTempView("gm2")
     val r = spark.sql("SELECT geomean(x) AS g FROM gm2").collect()(0)
     assert(math.abs(r.getDouble(0) - 4.0) < 1e-12,
@@ -28,7 +27,6 @@ class GeoMeanUdafSpec extends SparkSpec {
 
   test("all-nonpositive group yields NaN; merge across partitions is exact") {
     import spark.implicits._
-    GeoMeanUdaf.register(spark)
     Seq(0.0, -1.0).toDF("x").createOrReplaceTempView("gm3")
     assert(spark.sql("SELECT geomean(x) FROM gm3")
       .collect()(0).getDouble(0).isNaN)

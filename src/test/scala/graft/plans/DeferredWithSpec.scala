@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{HarnessSession, SparkSpec}
 import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * pushdown — the final plan carries `_common_expr` def-Projects and the
   * Filter condition references them instead of duplicated subtrees, (3)
   * nested defs expand fully (no With survives to physical planning),
-  * (4) install() is idempotent, (5) an uninstalled session fails LOUDLY
-  * rather than silently executing something else. */
+  * (4) `HarnessSession.install` is idempotent, (5) an uninstalled session
+  * fails LOUDLY rather than silently executing something else. */
 class DeferredWithSpec extends SparkSpec {
 
   // parquet-backed so pushdown has a real scan to target; a
@@ -22,7 +22,7 @@ class DeferredWithSpec extends SparkSpec {
 
   private lazy val withRule = {
     val s = spark.newSession()
-    ExpandDeferredWith.install(s)
+    HarnessSession.install(s)
     s
   }
 
@@ -75,8 +75,8 @@ class DeferredWithSpec extends SparkSpec {
 
   test("install is idempotent") {
     val n0 = withRule.experimental.extraOptimizations.length
-    ExpandDeferredWith.install(withRule)
-    ExpandDeferredWith.install(withRule)
+    HarnessSession.install(withRule)
+    HarnessSession.install(withRule)
     assert(withRule.experimental.extraOptimizations.length == n0)
   }
 
@@ -91,6 +91,7 @@ class DeferredWithSpec extends SparkSpec {
 
   test("pipeline_pretrain itself carries the collapsed gate") {
     val s = spark.newSession()
+    HarnessSession.install(s)
     val out = graft.ext.Pretrain.curate(docs(s))
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("_common_expr"))
