@@ -6,14 +6,6 @@ package graft
   * sink — `count()` would let Catalyst prune projections and under-report;
   * noop executes the complete plan including all output columns. */
 object Bench {
-  /** Quote + escape a string for embedding in the one-line JSON record —
-    * used for every free-text field (collector names, env-fed paths): a
-    * quote or backslash must not corrupt the record, because
-    * parseCommittedWarm swallows parse failures and would silently drop
-    * the committed warm baseline. */
-  private def jsonEsc(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = HarnessSession.build()
@@ -224,7 +216,7 @@ object Bench {
       ).flatten
       if (meds.isEmpty) ""
       else ("," + s""""norm_baseline":{""" + meds.mkString(",") +
-        s""","source":${jsonEsc(baselineSource)}}""")
+        s""","source":${Verify.jsonStr(baselineSource)}}""")
     }
     val normJs = Seq(
       normCold.map(v => s""""value_normalized":$v"""),
@@ -291,9 +283,9 @@ object Bench {
       // JSON-escape: an exotic collector name containing a quote or
       // backslash must not corrupt the whole record (parseCommittedWarm
       // would silently swallow the parse failure and drop the baseline).
-      jsonEsc(names)
+      Verify.jsonStr(names)
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"mean_sec":$mean,"warm_total":$warmTotal,"failed":$failedJs,"retimed":$retimedJs,"canary_cold":${arr(canaryCold)},"canary_warm":${arr(canaryWarm)},"canary_uniq_cold":${arr(canaryUniqCold)},"canary_uniq_warm":${arr(canaryUniqWarm)},"canary_every":$canaryEvery,"queries":${js(results)},"queries_warm":${js(warm)},"sf":${jsonEsc(sfDir)},"jvm_gc":$gc$normJs$chunkJs}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"mean_sec":$mean,"warm_total":$warmTotal,"failed":$failedJs,"retimed":$retimedJs,"canary_cold":${arr(canaryCold)},"canary_warm":${arr(canaryWarm)},"canary_uniq_cold":${arr(canaryUniqCold)},"canary_uniq_warm":${arr(canaryUniqWarm)},"canary_every":$canaryEvery,"queries":${js(results)},"queries_warm":${js(warm)},"sf":${Verify.jsonStr(sfDir)},"jvm_gc":$gc$normJs$chunkJs}"""
     println(line)
     // The driver's artifact retains only a stdout tail, which loses most
     // per-query timings; also write the complete line to a committed file
@@ -306,11 +298,7 @@ object Bench {
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
       }
-    queries.CoreQueries.coolShared(spark)
-    queries.GraphQueries.coolEdges(spark)
-    queries.ExtensionQueries.coolClusters(spark)
-    queries.ExtensionQueries.coolIvf(spark)
-    ext.TextAnalysis.coolTokens(spark)
+    ops.Scratch.releaseRun(spark)
     spark.stop()
   }
 }

@@ -59,10 +59,13 @@ object SparkEntry {
     if (name.startsWith("streaming_")) streaming.StreamHygiene.release(spark)
   }
 
-  /** The untimed session warm-up a timed runner pays before its first
-    * query. A failed step is reported on stderr and skipped: queries that
-    * do not touch it must still run. NonFatal only: an OOM or linkage
-    * error aborts the run instead of cascading into per-query failures. */
+  /** The untimed session warm-up every suite runner (Bench, SuiteAttr,
+    * Verify) pays before its first query, so the differential checks the
+    * shared state the benches time; [[ops.Scratch.releaseRun]] frees what
+    * it and the queries memoized. A failed step is reported on stderr and
+    * skipped: queries that do not touch it must still run. NonFatal only:
+    * an OOM or linkage error aborts the run instead of cascading into
+    * per-query failures. */
   def warm(spark: SparkSession, dir: String): Unit = {
     def step(label: String)(body: => Unit): Unit =
       try body catch { case NonFatal(e) =>

@@ -40,7 +40,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     qs.foreach { case (name, fn) =>
-      // NonFatal ONLY (same policy as warmShared below): an OOM/linkage
+      // NonFatal ONLY (same policy as SparkEntry.warm): an OOM/linkage
       // error must abort the JVM, not be recorded and cascade into ~70
       // misleading failures on a corrupted session with exit 0
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -87,29 +87,14 @@ object Verify {
       // shows the differential ran the bench's confs
       HarnessSession.defaults(sys.env, sys.props.toMap)
         .map { case (k, _) => s" $k=${spark.conf.get(k)}" }.mkString)
-    // one materialization of the shared enriched frame for the whole run;
-    // never fatal — queries that don't touch it must still verify.
-    // NonFatal only: an OOM/linkage error must abort the JVM, not cascade
-    // into ~70 misleading per-query failures.
-    try queries.CoreQueries.warmShared(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] warmShared failed: ${e.getMessage}")
-    }
-    // share the co-purchase edge table across the three graph queries
-    // (lazy: the first consumer's action pays the one materialization)
-    try queries.GraphQueries.warmEdges(spark, sfDir)
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[verify] warmEdges failed: ${e.getMessage}")
-    }
+    // the bench's warm-up, so the differential checks the shared state
+    // the benches time (enriched frame, edge table, bucketed tables)
+    SparkEntry.warm(spark, sfDir)
     val failures = dumpAll(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (name, _) =>
         pattern.isEmpty || name.contains(pattern) })
     writeJsonMap(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
-    queries.CoreQueries.coolShared(spark)
-    queries.GraphQueries.coolEdges(spark)
-    queries.ExtensionQueries.coolClusters(spark)
-    queries.ExtensionQueries.coolIvf(spark)
-    ext.TextAnalysis.coolTokens(spark)
+    ops.Scratch.releaseRun(spark)
     spark.stop()
     // exit 0 even on failures: the driver's compare step must still run
     // over the partial dump (a non-zero exit here could be read as "no

@@ -39,14 +39,14 @@ case class SignatureStoreStats(rows: Long, distinctDocs: Long,
 object Dedup {
 
   // Per-query scratch persists (self-join sides etc.) live in the shared
-  // graft.ops.Scratch registry; this remains the runner-facing release
-  // entry point (Verify/Bench call it after every query action).
+  // graft.ops.Scratch registry; runners release them after every query
+  // action through SparkEntry.release, which calls releaseScratch.
   private[ext] def persistScratch(df: DataFrame): DataFrame =
     graft.ops.Scratch.persist(df)
 
-  /** Unpersist every registered scratch frame (all packages). Safe to
-    * call between queries in a long-lived session; one-shot JVMs may skip
-    * it (process exit releases everything). */
+  /** Unpersist every registered per-query scratch frame (all packages),
+    * between queries. Run-scoped memos are freed by
+    * [[graft.ops.Scratch.releaseRun]]. */
   def releaseScratch(): Unit = graft.ops.Scratch.releaseAll()
 
   /** Exact duplicate groups: content hash → copies + canonical keeper

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.io.Sources.scatter
+import graft.ops.Scratch
 
 /** Text-analysis operators for a training-data pipeline: normalization,
   * token statistics, quality scoring, n-gram-heuristic language ID, and
@@ -47,27 +48,18 @@ object TextAnalysis {
   // re-derived the same normalize→split over `documents`, ~25% of the text
   // family's wall time. Stage it once per (session, corpus) — the
   // sharedClusters/ivfMemo lifecycle: first consumer pays the build, every
-  // later one reads the persisted frame, and the runner releases it at
-  // teardown via [[coolTokens]]. At 100 TB this scratch is the staged
-  // token table the first pipeline stage materializes to parquet;
-  // MEMORY_AND_DISK persist (evictions re-read from local disk, never
-  // recompute the tokenize subtree) is its single-JVM stand-in.
-  private val tokMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  // later one reads the persisted frame, and Scratch.releaseRun unpersists
+  // it at teardown. At 100 TB this scratch is the staged token table the
+  // first pipeline stage materializes to parquet; MEMORY_AND_DISK persist
+  // (evictions re-read from local disk, never recompute the tokenize
+  // subtree) is its single-JVM stand-in.
+  private val tokMemo = new Scratch.Memo[DataFrame](_.unpersist())
 
   def sharedTokens(s: org.apache.spark.sql.SparkSession, dir: String)
       : DataFrame =
-    tokMemo.getOrElseUpdate((s, dir),
+    tokMemo(s, dir)(
       tokenized(graft.io.Sources.table(s, dir, "documents"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Drop the memoized token scratch for `s` (all sessions if null). */
-  def coolTokens(s: org.apache.spark.sql.SparkSession): Unit =
-    tokMemo.keys.filter(k => s == null || k._1 == s).foreach { k =>
-      tokMemo.remove(k).foreach { df =>
-        try df.unpersist() catch { case _: Throwable => () }
-      }
-    }
 
   /** Character k-shingles at a stride, as (doc_id, shingle) rows.
     * Stride > 1 cuts shingle volume k-fold with modest recall loss — the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.etl.{Enrich, GenreKpis, HourlyKpis}
 import graft.io.Sources
+import graft.ops.Scratch
 
 /** Core parity queries on the driver testdata, mapped per SURVEY §5.2:
   * `events` plays streams (ts→listen_time, event_type→track key), `customer`
@@ -40,24 +41,15 @@ object CoreQueries extends QueryGroup {
   // a session that will run MANY queries persists it once — Spark's
   // CacheManager then substitutes the in-memory relation into every later
   // query whose subplan matches (no query code changes, results unchanged).
-  // Explicitly opt-in (Verify/Bench mains call it): plan-shape tests and
-  // single-query sessions keep the pure scan+join plan.
-  private val warmed = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  // Explicitly opt-in (SparkEntry.warm calls it): plan-shape tests and
+  // single-query sessions keep the pure scan+join plan. Queries never read
+  // this memo; it only owns the persist, which Scratch.releaseRun undoes.
+  private val warmed = new Scratch.Memo[DataFrame](_.unpersist())
 
-  /** Persist the shared enriched frame for this (session, sfDir). Pair
-    * with [[coolShared]] in long-lived processes — the map intentionally
-    * holds strong references (Verify/Bench are one-shot JVMs), so an
-    * un-cooled entry pins the session and its cache until process exit. */
+  /** Persist the shared enriched frame for this (session, sfDir), until
+    * [[Scratch.releaseRun]]. */
   def warmShared(s: SparkSession, dir: String): Unit =
-    warmed.getOrElseUpdate((s, dir), enrichedEvents(s, dir).persist())
-
-  /** Unpersist and release every warmed entry for `s` (all, if null). */
-  def coolShared(s: SparkSession): Unit =
-    warmed.keys.filter(k => s == null || k._1 == s).foreach { k =>
-      warmed.remove(k).foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
-    }
+    warmed(s, dir)(enrichedEvents(s, dir).persist())
 
   /** DuckDB twin of [[enrichedEvents]]. */
   val enrichedSql: String =

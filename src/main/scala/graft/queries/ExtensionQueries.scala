@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, NaiveBayesText, Pca, Similarity, TextAnalysis}
 import graft.io.Sources
+import graft.ops.Scratch
 
 /** North-star extension queries (BASELINE.json): dedup, similarity search,
   * text analysis, multimodal metadata — each oracle-checked on the
@@ -29,8 +30,10 @@ object ExtensionQueries extends QueryGroup {
   // iterative pass once, every later consumer reads the materialized
   // (tiny — O(near-dup docs)) labeling. Deterministic, so correctness is
   // invocation-order-independent; a fresh JVM recomputes from scratch.
-  private val clustersMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  // This memo and the two below it hold checkpointed frames:
+  // Scratch.releaseRun drops the references and the ContextCleaner
+  // reclaims the checkpoint blocks once they are unreferenced.
+  private val clustersMemo = new Scratch.Memo[DataFrame](_ => ())
 
   // The cluster build runs minhashComponentsAuto's DATA-DRIVEN selection
   // (r13 VERDICT #2): the decision probe — one aggregate over the staged
@@ -54,7 +57,7 @@ object ExtensionQueries extends QueryGroup {
   // select over its own checkpointed fixpoint), keeping this corpus's
   // graded plans unchanged.
   private def sharedClusters(s: SparkSession, dir: String): DataFrame =
-    clustersMemo.getOrElseUpdate((s, dir),
+    clustersMemo(s, dir)(
       if (Dedup.maxSignatureClass(sharedSignatures(s, dir)) >=
           Dedup.collapseClassThreshold)
         Dedup.minhashComponentsCollapsedFrom(sharedSignatures(s, dir))
@@ -68,54 +71,23 @@ object ExtensionQueries extends QueryGroup {
   // Memoize one lazily localCheckpoint'ed materialization of the (tiny —
   // O(near-dup pairs)) candidate set per (session, dir); the verify
   // stages that differ per consumer (Jaccard, containment, edit distance)
-  // still run per query, on candidates only. Released with the cluster
-  // memo in [[coolClusters]].
-  private val candMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  // still run per query, on candidates only.
+  private val candMemo = new Scratch.Memo[DataFrame](_ => ())
 
   // The banded signature table itself is staged ONCE beneath the
   // candidate memo (r14): it feeds the candidate build AND the cluster
   // builder's Auto decision probe, so the shingle→md5→min pipeline runs
   // once per (session, dir) however many consumers arrive, and the probe
   // costs one aggregate over the checkpointed (2 rows/doc) table.
-  private val sigMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val sigMemo = new Scratch.Memo[DataFrame](_ => ())
 
   private def sharedSignatures(s: SparkSession, dir: String): DataFrame =
-    sigMemo.getOrElseUpdate((s, dir),
+    sigMemo(s, dir)(
       Dedup.minhashSignatures(docs(s, dir)).localCheckpoint(false))
 
   private def sharedCandidates(s: SparkSession, dir: String): DataFrame =
-    candMemo.getOrElseUpdate((s, dir),
+    candMemo(s, dir)(
       Dedup.candidatesFrom(sharedSignatures(s, dir)).localCheckpoint(false))
-
-  /** Drop memoized cluster labelings for `s` (all sessions if null) — the
-    * coolShared twin for long-lived sessions; the checkpoint blocks are
-    * reclaimed by the ContextCleaner once the frames are unreferenced.
-    * One-shot Verify/Bench JVMs may skip this (process exit releases
-    * everything). */
-  def coolClusters(s: SparkSession): Unit = {
-    clustersMemo.keys.filter(k => s == null || k._1 == s)
-      .foreach(clustersMemo.remove)
-    candMemo.keys.filter(k => s == null || k._1 == s)
-      .foreach(candMemo.remove)
-    sigMemo.keys.filter(k => s == null || k._1 == s)
-      .foreach(sigMemo.remove)
-  }
-
-  /** Drop memoized trained-IVF indexes for `s` (all sessions if null),
-    * unpersisting each build's staged vectorized corpus — the
-    * coolClusters twin for the ANN/SemDeDup family. */
-  def coolIvf(s: SparkSession): Unit = {
-    ivfMemo.keys.filter(k => s == null || k._1 == s).foreach { k =>
-      ivfMemo.remove(k).foreach(_.release())
-      ivfCentsMemo.remove(k)
-    }
-    if (ivfLast.exists(k => s == null || k._1 == s)) ivfLast = None
-    // the PCA model memo is the same trained-artifact lifecycle
-    pcaMemo.keys.filter(k => s == null || k._1 == s).foreach(pcaMemo.remove)
-    if (pcaLast.exists(k => s == null || k._1 == s)) pcaLast = None
-  }
 
   // ---- shared DuckDB fragments ----
 
@@ -449,28 +421,28 @@ object ExtensionQueries extends QueryGroup {
   // tie-break, exactly KMeansModel.predict's rule) and the nprobe search
   // from literals. Training at plan-construction time is inherent to a
   // trained index — production builds the index before queries arrive.
-  private val ivfMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.ext.Ivf.Index]
+  // Scratch.releaseRun unpersists each build's staged vectorized corpus.
+  private val ivfMemo = new Scratch.Memo[graft.ext.Ivf.Index](_.release())
   // centroid literals are keyed exactly like the index memo, plus a
   // last-run pointer the post-run oracles render from: a GLOBAL slot here
   // could pair dir A's result with dir B's centroids after a second
-  // corpus is queried in the same JVM — a false oracle match
-  private val ivfCentsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, Array[Double])]]
+  // corpus is queried in the same JVM — a false oracle match. The oracle
+  // renders only while the pointed-to entry is live, so nothing renders
+  // after Scratch.releaseRun.
+  private val ivfCentsMemo =
+    new Scratch.Memo[Seq[(Int, Array[Double])]](_ => ())
   @volatile private var ivfLast: Option[(SparkSession, String)] = None
 
   private def ivfCents: Option[Seq[(Int, Array[Double])]] =
-    ivfLast.flatMap(ivfCentsMemo.get)
+    ivfLast.flatMap { case (s, dir) => ivfCentsMemo.get(s, dir) }
 
   private def ivfIndex(s: SparkSession, dir: String): graft.ext.Ivf.Index = {
-    val key = (s, dir)
-    val idx = ivfMemo.getOrElseUpdate(key,
-      graft.ext.Ivf.build(emb(s, dir)))
+    val idx = ivfMemo(s, dir)(graft.ext.Ivf.build(emb(s, dir)))
     // centroids is a LocalRelation (built from driver-side arrays) —
     // this collect is a local materialization, not a cluster job
-    ivfCentsMemo.getOrElseUpdate(key, idx.centroids.collect().toSeq
+    ivfCentsMemo(s, dir)(idx.centroids.collect().toSeq
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)))
-    ivfLast = Some(key)
+    ivfLast = Some((s, dir))
     idx
   }
 
@@ -1572,18 +1544,17 @@ object ExtensionQueries extends QueryGroup {
   // and both engines then run the identical left-to-right product sums.
   // keyed like ivfCentsMemo and for the same reason: the post-run oracle
   // must render the basis of the LAST (session, dir) actually queried,
-  // never a stale fit from another corpus in the same JVM
-  private val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Pca.Model]
+  // never a stale fit from another corpus in the same JVM, and never one
+  // Scratch.releaseRun has dropped
+  private val pcaMemo = new Scratch.Memo[Pca.Model](_ => ())
   @volatile private var pcaLast: Option[(SparkSession, String)] = None
 
-  private def pcaFitted: Option[Pca.Model] = pcaLast.flatMap(pcaMemo.get)
+  private def pcaFitted: Option[Pca.Model] =
+    pcaLast.flatMap { case (s, dir) => pcaMemo.get(s, dir) }
 
   private def pcaModel(s: SparkSession, dir: String): Pca.Model = {
-    val key = (s, dir)
-    val m = pcaMemo.getOrElseUpdate(key,
-      Pca.fit(emb(s, dir), "embedding", dims = 64))
-    pcaLast = Some(key)
+    val m = pcaMemo(s, dir)(Pca.fit(emb(s, dir), "embedding", dims = 64))
+    pcaLast = Some((s, dir))
     m
   }
 

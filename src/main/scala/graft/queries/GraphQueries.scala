@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.Sources
+import graft.ops.Scratch
 
 /** Graph-shape analytics over the co-purchase graph (parts linked when
   * ordered together in ≥ 2 orders — the `g_copurchase_pairs` edge set):
@@ -44,26 +45,21 @@ object GraphQueries extends QueryGroup {
   // per-query plans — CacheManager can't dedupe this for us because the
   // pair-explode lambdas canonicalize differently per instantiation (the
   // same reason the per-query localCheckpoints exist, see triangleCount).
-  private val edgesMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  // Scratch.releaseRun drops the reference; the ContextCleaner reclaims
+  // the checkpoint blocks once it is unreferenced.
+  private val edgesMemo = new Scratch.Memo[DataFrame](_ => ())
 
   def warmEdges(s: SparkSession, dir: String): Unit =
-    edgesMemo.getOrElseUpdate((s, dir), edgePairs(s, dir).localCheckpoint(false))
-
-  /** Drop memoized edge tables for `s` (all sessions if null); checkpoint
-    * blocks are ContextCleaner-reclaimed once unreferenced. */
-  def coolEdges(s: SparkSession): Unit =
-    edgesMemo.keys.filter(k => s == null || k._1 == s)
-      .foreach(edgesMemo.remove)
+    edgesMemo(s, dir)(edgePairs(s, dir).localCheckpoint(false))
 
   /** The shared edge table when warmed; otherwise a fresh build —
     * checkpointed only when the caller has multiple consumers. */
   private[queries] def sharedEdges(s: SparkSession, dir: String,
       checkpointFallback: Boolean): DataFrame =
-    edgesMemo.getOrElse((s, dir), {
+    edgesMemo.get(s, dir).getOrElse {
       val e = edgePairs(s, dir)
       if (checkpointFallback) e.localCheckpoint(false) else e
-    })
+    }
 
   /** Per-node triangle participation counts, by degree-ordered edge
     * orientation (the node-iterator++ algorithm of Schank & Wagner 2005 /

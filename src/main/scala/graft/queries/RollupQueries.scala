@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.etl.Rollups
+import graft.ops.Scratch
 
 /** The seven Documentation.pdf validation queries (SURVEY §3.3) as named
   * queries: Spark runs them through `spark.sql` over temp views of the KPI
@@ -14,15 +15,13 @@ object RollupQueries extends QueryGroup {
   // seven validations against them; mirror that by persisting the two KPI
   // frames per (session, sfDir) instead of recomputing the full pipeline
   // for every rollup. The tables are tiny (days × genres / days × 24).
-  // Entries are never evicted — acceptable for the Verify/Bench process
-  // lifetime this serves; a long-lived multi-session server would want
-  // weak keys here.
-  private val kpiCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  // Scratch.releaseRun unpersists both.
+  private val kpiCache = new Scratch.Memo[(DataFrame, DataFrame)]({
+    case (g, h) => g.unpersist(); h.unpersist()
+  })
 
   private def kpis(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    kpiCache.getOrElseUpdate((s, dir),
+    kpiCache(s, dir)(
       (CoreQueries.genreKpis(s, dir).persist(),
         CoreQueries.hourlyKpis(s, dir).persist()))
 

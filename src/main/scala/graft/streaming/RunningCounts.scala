@@ -80,31 +80,26 @@ object RunningCounts {
     * the single delivered batch makes each emitted (user, type) row its
     * full count — the plain GROUP BY twin DuckDB checks. */
   def runTypesAvailableNow(spark: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = StreamConf.sized(spark) {
+      dir: String): org.apache.spark.sql.DataFrame =
+      StreamConf.sized(spark, StreamConf.RocksDb) {
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      // nanos-vintage fixtures need the nanosAsLong conf even though `ts`
-      // is never selected (PARQUET_TYPE_ILLEGAL otherwise; the session
-      // carries it from HarnessSession.install) — the memoized
-      // Sources.parquetSchema skips the per-call inference job
-      val schema =
-        graft.io.Sources.parquetSchema(spark, s"$dir/events.parquet")
-      implicit val inEnc: Encoder[(Long, String)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
-      val pairs = spark.readStream.schema(schema).parquet(s"$dir/events.*")
-        .select(col("user_id"), col("event_type")).as[(Long, String)]
-      val q = typeTotals(pairs)
-        .writeStream.format("memory").queryName("graft_tws_types")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table("graft_tws_types").orderBy("user_id", "event_type")
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // nanos-vintage fixtures need the nanosAsLong conf even though `ts`
+    // is never selected (PARQUET_TYPE_ILLEGAL otherwise; the session
+    // carries it from HarnessSession.install) — the memoized
+    // Sources.parquetSchema skips the per-call inference job
+    val schema =
+      graft.io.Sources.parquetSchema(spark, s"$dir/events.parquet")
+    implicit val inEnc: Encoder[(Long, String)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.STRING)
+    val pairs = spark.readStream.schema(schema).parquet(s"$dir/events.*")
+      .select(col("user_id"), col("event_type")).as[(Long, String)]
+    val q = typeTotals(pairs)
+      .writeStream.format("memory").queryName("graft_tws_types")
+      .outputMode("update")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    spark.table("graft_tws_types").orderBy("user_id", "event_type")
   }
 
   final case class IdleSession(user_id: Long, n_events: Long, last_ms: Long)
@@ -184,26 +179,21 @@ object RunningCounts {
     * accumulation is RunningCountsSpec's job; this entry data-checks the
     * operator (and the RocksDB provider path) on real data. */
   def runAvailableNow(spark: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = StreamConf.sized(spark) {
+      : org.apache.spark.sql.DataFrame =
+      StreamConf.sized(spark, StreamConf.RocksDb) {
     import org.apache.spark.sql.functions.col
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      // see runTypesAvailableNow: memoized probe, nanos conf inside
-      val schema =
-        graft.io.Sources.parquetSchema(spark, s"$dir/events.parquet")
-      implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-      val users = spark.readStream.schema(schema).parquet(s"$dir/events.*")
-        .select(col("user_id")).as[Long]
-      val q = runningTotals(users)
-        .writeStream.format("memory").queryName("graft_tws_totals")
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table("graft_tws_totals").orderBy("user_id")
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // see runTypesAvailableNow: memoized probe, nanos conf inside
+    val schema =
+      graft.io.Sources.parquetSchema(spark, s"$dir/events.parquet")
+    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
+    val users = spark.readStream.schema(schema).parquet(s"$dir/events.*")
+      .select(col("user_id")).as[Long]
+    val q = runningTotals(users)
+      .writeStream.format("memory").queryName("graft_tws_totals")
+      .outputMode("update")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    spark.table("graft_tws_totals").orderBy("user_id")
   }
 }

@@ -19,11 +19,22 @@ import org.apache.spark.sql.SparkSession
   * moves.
   */
 object StreamConf {
-  def sized[T](spark: SparkSession, partitions: Int = 8)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, partitions.toString)
+  /** Runs `body` with 8 shuffle partitions (so 8 state stores per stateful
+    * operator) and, when given, `stateStore` as the state-store provider
+    * class; both keys are restored afterwards. */
+  def sized[T](spark: SparkSession, stateStore: Option[String] = None)
+      (body: => T): T = {
+    val confs = ("spark.sql.shuffle.partitions" -> "8") +:
+      stateStore.map("spark.sql.streaming.stateStore.providerClass" -> _).toSeq
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
+
+  /** The provider transformWithState requires. */
+  val RocksDb: Option[String] =
+    Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 }

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every entry point builds its session through [[HarnessSession]], and only
   * its `install` puts graft's rules, functions and confs on a session: a
   * second builder or install point would drift from the one definition the
-  * bench measures. */
+  * bench measures. Likewise state shared across a run's queries has one
+  * owner, `ops.Scratch`, whose `releaseRun` frees it all. */
 class SessionGuardSpec extends AnyFunSuite {
   private val builder = """SparkSession\s*\.\s*builder""".r
 
@@ -41,6 +42,33 @@ class SessionGuardSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty, "install optimizer rules, SQL functions and session confs in " +
       s"HarnessSession.install, which every built session runs: $offenders")
+  }
+
+  private val sparkEntry = """\bSparkEntry\b""".r
+  private val install = """\bHarnessSession\s*\.\s*install\s*\(""".r
+
+  test("every tools/*.scala script that runs SparkEntry installs first") {
+    // the scripts run on spark-shell's own session, which HarnessSession.build
+    // never saw: without install, pipeline_pretrain fails to codegen
+    val offenders = scalaFiles("tools", recursive = false).filter { p =>
+      val code = comment.replaceAllIn(Files.readString(p), "")
+      sparkEntry.findFirstMatchIn(code).exists(use =>
+        !install.findFirstMatchIn(code).exists(_.start < use.start))
+    }
+    assert(offenders.isEmpty,
+      s"call HarnessSession.install(spark) before naming SparkEntry: $offenders")
+  }
+
+  private val sessionMemo =
+    """TrieMap\s*(?:\.\s*empty\s*)?\[\s*\(\s*(?:[\w.]+\.)?SparkSession\s*,\s*String\s*\)""".r
+
+  test("run-scoped state keyed by (session, dir) lives only in ops.Scratch") {
+    val offenders = scalaFiles("src/main/scala", recursive = true)
+      .filterNot(_.endsWith("graft/ops/Scratch.scala"))
+      .filter(p => sessionMemo.findFirstIn(comment.replaceAllIn(Files.readString(p), ""))
+        .isDefined)
+    assert(offenders.isEmpty, "memoize per (session, dir) with a Scratch.Memo, which " +
+      s"Scratch.releaseRun frees: $offenders")
   }
 
   private val objectDecl = """\bobject\s+(\w+)""".r

@@ -67,7 +67,7 @@ class TextPropertiesSpec extends SparkSpec {
       val got = TextAnalysis.bm25TopK(docs, queries, k = k, k1 = k1, b = b)
         .select("qid", "rank", "doc_id", "score_m")
         .as[(Long, Int, Long, Long)].collect().toSet
-      TextAnalysis.coolTokens(spark)
+      graft.ops.Scratch.releaseRun(spark)
 
       // Reference: the formula, folded per doc. N and avgdl are over ALL
       // docs — and avgdl uses split-array length (an empty doc is [""]:
@@ -112,7 +112,7 @@ class TextPropertiesSpec extends SparkSpec {
       val got = TextAnalysis.tfIdfTopTerms(docs, k = 4)
         .select("doc_id", "rank", "tok", "tfidf")
         .as[(Long, Int, String, Double)].collect().toSet
-      TextAnalysis.coolTokens(spark)
+      graft.ops.Scratch.releaseRun(spark)
 
       val n = rows.size.toDouble
       val tf = rows.map { case (id, t) =>
@@ -149,7 +149,7 @@ class TextPropertiesSpec extends SparkSpec {
           minCosine = minCos)
         .select("doc_a", "doc_b", "cosine")
         .as[(Long, Long, Double)].collect().toSet
-      TextAnalysis.coolTokens(spark)
+      graft.ops.Scratch.releaseRun(spark)
 
       val n = rows.size.toDouble
       val tf = rows.map { case (id, t) =>

@@ -60,7 +60,7 @@ class GraphSkylineSpec extends SparkSpec {
       unwarmed.zip(warmed).zipWithIndex.foreach { case ((u, w), i) =>
         assert(u == w, s"consumer $i disagrees warmed vs unwarmed")
       }
-    } finally GraphQueries.coolEdges(spark)
+    } finally graft.ops.Scratch.releaseRun(spark)
   }
 
   test("sort-sweep skyline == NOT-EXISTS dominance definition") {

@@ -6,7 +6,8 @@ import graft.{SparkEntry, SparkSpec}
   * render the artifact of the LAST (session, dir) actually queried — a
   * global slot would pair dir A's result with dir B's literals after a
   * second corpus runs in the same JVM (ADVICE r5 low: false-oracle-match
-  * risk). Pins the per-(session, dir) keying and the coolIvf teardown. */
+  * risk). Pins the per-(session, dir) keying and the Scratch.releaseRun
+  * teardown. */
 class TrainedModelMemoSpec extends SparkSpec {
 
   private val dirA = "/root/testdata/sf0.001"
@@ -26,12 +27,12 @@ class TrainedModelMemoSpec extends SparkSpec {
     assert(a2 == a1, "memoized fit must render identically for its dir")
   }
 
-  test("coolIvf drops trained-model memos so no stale oracle can render") {
+  test("releaseRun drops trained-model memos so no stale oracle can render") {
     SparkEntry.queries("pca_project")(spark, dirA)
     SparkEntry.queries("sim_ivf_trained_topk")(spark, dirA)
     assert(SparkEntry.oracleSql.contains("pca_project"))
     assert(SparkEntry.oracleSql.contains("sim_ivf_trained_topk"))
-    ExtensionQueries.coolIvf(spark)
+    graft.ops.Scratch.releaseRun(spark)
     val after = SparkEntry.oracleSql
     assert(!after.contains("pca_project"))
     assert(!after.contains("sim_ivf_trained_topk"))

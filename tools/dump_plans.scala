@@ -1,4 +1,7 @@
 // Regenerates PLANS.md — run via tools/dump_plans.sh
+// spark-shell's own session has none of graft's rules, SQL functions or
+// confs until this runs (pipeline_pretrain fails to codegen without them)
+graft.HarnessSession.install(spark)
 import java.nio.file.{Files, Paths}
 val dir = "/root/testdata/sf0.1"
 val names = Seq("genre_kpis", "hourly_kpis", "hourly_kpis_fused", "q1_agg",
