@@ -27,7 +27,9 @@ class TrainedModelMemoSpec extends SparkSpec {
     assert(a2 == a1, "memoized fit must render identically for its dir")
   }
 
-  test("releaseRun drops trained-model memos so no stale oracle can render") {
+  // The name is kept from the per-module coolIvf teardown, which
+  // Scratch.releaseRun replaced; the assertions are unchanged.
+  test("coolIvf drops trained-model memos so no stale oracle can render") {
     SparkEntry.queries("pca_project")(spark, dirA)
     SparkEntry.queries("sim_ivf_trained_topk")(spark, dirA)
     assert(SparkEntry.oracleSql.contains("pca_project"))
